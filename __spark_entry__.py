@@ -1245,12 +1245,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "union_dedup": q_union_dedup,
         "timestamp_to_epoch": q_timestamp_to_epoch,
         "tag_normalize": q_tag_normalize,
-        "key_template": q_key_template,
-        "literal_replace": q_literal_replace,
         "stale_pct": q_stale_pct,
-        "json_extract": q_json_extract,
         "posexplode_columns": q_posexplode_columns,
-        "base64_decode": q_base64_decode,
         "exact_dedup": q_exact_dedup,
         "ngram_jaccard": q_ngram_jaccard,
         "minhash_lsh": q_minhash_lsh,
@@ -1289,6 +1285,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_changes": q_cdc_changes,
         "lake_read_where": q_lake_read_where,
         "cdc_usage_rels": q_cdc_usage_rels,
+        "key_template": q_key_template,
+        "literal_replace": q_literal_replace,
+        "json_extract": q_json_extract,
+        "base64_decode": q_base64_decode,
     }
 
 

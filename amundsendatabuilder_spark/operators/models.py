@@ -6,9 +6,9 @@ expansion ``databuilder/models/table_metadata.py:334-503``; owner
 ``table_owner.py:59-95``; last-updated ``table_last_updated.py:74-107``;
 watermark ``watermark.py:74-104``) as pure ``select``/``explode`` DataFrame
 transforms unioned into long-format node/relation frames — unions are
-plan-level (no shuffle); the only shuffle is the low-cardinality
-``dropDuplicates`` on shared Database/Cluster/Schema nodes, equivalent to the
-reference's class-level first-writer-wins dedup sets
+plan-level (no shuffle). Shared Database/Cluster/Schema/User rows repeat once
+per entity; the pipeline's keyed aggregate keeps one per key, equivalent to
+the reference's class-level first-writer-wins dedup sets
 (``table_metadata.py:232-234``; payload is key-determined so LWW==FWW).
 
 Node/relation value typing follows the reference's stringly model: attribute
@@ -19,7 +19,9 @@ emitter can reproduce the ``:UNQUOTED`` header suffix
 ``scope_key``: entity-scoped rows (table node, its columns/description/
 timestamp/watermark and their relations) carry their owning ``table_key`` so
 the pipeline can compute exact child-deletion sets (old scoped keys minus new
-scoped keys) when an entity shrinks or is deleted. Shared nodes
+scoped keys) when an entity shrinks or is deleted — it expands new and old
+entity rows together, carrying a side tag, and resolves the diff in the same
+keyed aggregate. Shared nodes
 (Database/Cluster/Schema/User) have null scope and are reclaimed only by the
 staleness task, mirroring reference semantics.
 """
@@ -79,19 +81,21 @@ def _tmap(**kv: str) -> Column:
 
 
 def _node(e: DataFrame, key: Column, label: str, attrs: Column,
-          types: Column | None = None, scope: Column | None = None) -> DataFrame:
+          types: Column | None = None, scope: Column | None = None,
+          carry: tuple[str, ...] = ()) -> DataFrame:
     return e.select(
         key.alias("key"),
         F.lit(label).alias("label"),
         attrs.alias("attributes"),
         (types if types is not None else _tmap()).alias("attr_types"),
         (scope if scope is not None else F.lit(None).cast("string")).alias("scope_key"),
+        *carry,
     )
 
 
 def _rel(e: DataFrame, sk: Column, sl: str, ek: Column, el: str, typ: str,
          rtyp: str, attrs: Column | None = None, types: Column | None = None,
-         scope: Column | None = None) -> DataFrame:
+         scope: Column | None = None, carry: tuple[str, ...] = ()) -> DataFrame:
     null_map = F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
     return e.select(
         sk.alias("start_key"),
@@ -103,6 +107,7 @@ def _rel(e: DataFrame, sk: Column, sl: str, ek: Column, el: str, typ: str,
         (attrs if attrs is not None else null_map).alias("attributes"),
         (types if types is not None else null_map).alias("attr_types"),
         (scope if scope is not None else F.lit(None).cast("string")).alias("scope_key"),
+        *carry,
     )
 
 
@@ -110,8 +115,13 @@ def _union(dfs: list[DataFrame]) -> DataFrame:
     return functools.reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def nodes_from_entities(e: DataFrame) -> DataFrame:
-    """All graph nodes produced by a batch of extracted entity rows."""
+def nodes_from_entities(e: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """All graph nodes produced by a batch of extracted entity rows.
+
+    Shared nodes repeat once per entity row (their payload is key-determined);
+    the caller's keyed aggregate keeps one. ``carry`` names columns of ``e``
+    copied onto every node row."""
+    node = functools.partial(_node, carry=carry)
     tkey = F.col("table_key")
     scope = tkey
     desc_key = F.concat(tkey, F.lit("/_description"))
@@ -119,7 +129,7 @@ def nodes_from_entities(e: DataFrame) -> DataFrame:
     wm_key = F.concat(tkey, F.lit("/high_watermark/"))
 
     cols = e.select(
-        "table_key", "lang",
+        "table_key", "lang", *carry,
         F.posexplode(
             F.zip_with(
                 "functions", "fn_comments",
@@ -127,42 +137,42 @@ def nodes_from_entities(e: DataFrame) -> DataFrame:
             )
         ).alias("sort_order", "p"),
     ).select(
-        "table_key", "lang", "sort_order",
+        "table_key", "lang", "sort_order", *carry,
         F.col("p.fn").alias("fn_name"), F.col("p.cm").alias("fn_comment"),
     )
 
     shared = _union(
         [
-            _node(e, F.col("database_key"), "Database", _smap(name=F.col("database"))),
-            _node(e, F.col("cluster_key"), "Cluster", _smap(name=F.col("cluster"))),
-            _node(e, F.col("schema_key"), "Schema", _smap(name=F.col("repo"))),
+            node(e, F.col("database_key"), "Database", _smap(name=F.col("database"))),
+            node(e, F.col("cluster_key"), "Cluster", _smap(name=F.col("cluster"))),
+            node(e, F.col("schema_key"), "Schema", _smap(name=F.col("repo"))),
             # full_name = email: the changelog has no profile names; non-null
             # full_name keeps these users visible to the user search query
             # (reference filters `WHERE user.full_name IS NOT NULL`,
             # neo4j_search_data_extractor.py:72)
-            _node(e, F.col("owner_email"), "User",
-                  _smap(email=F.col("owner_email"),
-                        full_name=F.col("owner_email"), is_active=F.lit(True)),
-                  _tmap(is_active="bool")),
+            node(e, F.col("owner_email"), "User",
+                 _smap(email=F.col("owner_email"),
+                       full_name=F.col("owner_email"), is_active=F.lit(True)),
+                 _tmap(is_active="bool")),
         ]
-    ).dropDuplicates(["key", "label"])
+    )
 
     scoped = _union(
         [
-            _node(
+            node(
                 e, tkey, "Table",
                 _smap(name=F.col("path"), is_view=F.lit(False),
                       content_sha256=F.col("content_sha256"),
                       commit=F.col("commit"), lang=F.col("lang")),
                 _tmap(is_view="bool"), scope,
             ),
-            _node(
+            node(
                 e.where(F.col("description").isNotNull()), desc_key, "Description",
                 _smap(description=F.col("description"),
                       description_source=F.lit("description")),
                 None, scope,
             ),
-            _node(
+            node(
                 cols,
                 F.concat(F.col("table_key"), F.lit("/"), F.col("fn_name")), "Column",
                 _smap(name=F.col("fn_name"), type=F.col("lang"),
@@ -171,7 +181,7 @@ def nodes_from_entities(e: DataFrame) -> DataFrame:
             ),
             # per-column Description node (reference column description,
             # ``table_metadata.py:123-127,176-180``): key = {col_key}/_description
-            _node(
+            node(
                 cols.where(F.col("fn_comment").isNotNull()),
                 F.concat(F.col("table_key"), F.lit("/"), F.col("fn_name"),
                          F.lit("/_description")),
@@ -180,14 +190,14 @@ def nodes_from_entities(e: DataFrame) -> DataFrame:
                       description_source=F.lit("description")),
                 None, F.col("table_key"),
             ),
-            _node(
+            node(
                 e, ts_key, "Timestamp",
                 _smap(last_updated_timestamp=F.col("last_updated_epoch"),
                       timestamp=F.col("last_updated_epoch"),
                       name=F.lit("last_updated_timestamp")),
                 _tmap(last_updated_timestamp="int", timestamp="int"), scope,
             ),
-            _node(
+            node(
                 e, wm_key, "Watermark",
                 _smap(partition_key=F.lit("version"),
                       partition_value=F.col("version"),
@@ -199,8 +209,11 @@ def nodes_from_entities(e: DataFrame) -> DataFrame:
     return shared.unionByName(scoped)
 
 
-def relations_from_entities(e: DataFrame) -> DataFrame:
-    """All graph relations (forward + reverse type pairs, stored once)."""
+def relations_from_entities(e: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """All graph relations (forward + reverse type pairs, stored once).
+    Shared relations repeat per entity row and ``carry`` is copied, as in
+    :func:`nodes_from_entities`."""
+    rel = functools.partial(_rel, carry=carry)
     tkey = F.col("table_key")
     scope = tkey
     desc_key = F.concat(tkey, F.lit("/_description"))
@@ -208,7 +221,7 @@ def relations_from_entities(e: DataFrame) -> DataFrame:
     wm_key = F.concat(tkey, F.lit("/high_watermark/"))
 
     cols = e.select(
-        "table_key",
+        "table_key", *carry,
         F.explode(
             F.zip_with(
                 "functions", "fn_comments",
@@ -216,40 +229,40 @@ def relations_from_entities(e: DataFrame) -> DataFrame:
             )
         ).alias("p"),
     ).select(
-        "table_key",
+        "table_key", *carry,
         F.col("p.fn").alias("fn_name"), F.col("p.cm").alias("fn_comment"),
     )
     col_key = F.concat(F.col("table_key"), F.lit("/"), F.col("fn_name"))
 
     shared = _union(
         [
-            _rel(e, F.col("database_key"), "Database", F.col("cluster_key"),
-                 "Cluster", "CLUSTER", "CLUSTER_OF"),
-            _rel(e, F.col("cluster_key"), "Cluster", F.col("schema_key"),
-                 "Schema", "SCHEMA", "SCHEMA_OF"),
+            rel(e, F.col("database_key"), "Database", F.col("cluster_key"),
+                "Cluster", "CLUSTER", "CLUSTER_OF"),
+            rel(e, F.col("cluster_key"), "Cluster", F.col("schema_key"),
+                "Schema", "SCHEMA", "SCHEMA_OF"),
         ]
-    ).dropDuplicates(["start_key", "end_key", "type"])
+    )
 
     scoped = _union(
         [
-            _rel(e, F.col("schema_key"), "Schema", tkey, "Table",
-                 "TABLE", "TABLE_OF", scope=scope),
-            _rel(e.where(F.col("description").isNotNull()), tkey, "Table",
-                 desc_key, "Description", "DESCRIPTION", "DESCRIPTION_OF", scope=scope),
-            _rel(cols, F.col("table_key"), "Table", col_key, "Column",
-                 "COLUMN", "COLUMN_OF", scope=F.col("table_key")),
-            _rel(
+            rel(e, F.col("schema_key"), "Schema", tkey, "Table",
+                "TABLE", "TABLE_OF", scope=scope),
+            rel(e.where(F.col("description").isNotNull()), tkey, "Table",
+                desc_key, "Description", "DESCRIPTION", "DESCRIPTION_OF", scope=scope),
+            rel(cols, F.col("table_key"), "Table", col_key, "Column",
+                "COLUMN", "COLUMN_OF", scope=F.col("table_key")),
+            rel(
                 cols.where(F.col("fn_comment").isNotNull()),
                 col_key, "Column",
                 F.concat(col_key, F.lit("/_description")), "Description",
                 "DESCRIPTION", "DESCRIPTION_OF", scope=F.col("table_key"),
             ),
-            _rel(e, F.col("owner_email"), "User", tkey, "Table",
-                 "OWNER_OF", "OWNER", scope=scope),
-            _rel(e, tkey, "Table", ts_key, "Timestamp",
-                 "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF", scope=scope),
-            _rel(e, wm_key, "Watermark", tkey, "Table",
-                 "BELONG_TO_TABLE", "WATERMARK", scope=scope),
+            rel(e, F.col("owner_email"), "User", tkey, "Table",
+                "OWNER_OF", "OWNER", scope=scope),
+            rel(e, tkey, "Table", ts_key, "Timestamp",
+                "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF", scope=scope),
+            rel(e, wm_key, "Watermark", tkey, "Table",
+                "BELONG_TO_TABLE", "WATERMARK", scope=scope),
         ]
     )
     return shared.unionByName(scoped)

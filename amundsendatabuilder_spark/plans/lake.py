@@ -958,15 +958,6 @@ class SnapshotTable:
           flat/narrow schemas or when shuffle bandwidth (not CPU) is the
           bottleneck; loses when rows carry map/struct payloads.
         """
-        t_prof0 = time.time()
-        prof = os.environ.get("SPARK_CDC_PROFILE_PREPARE")
-        tname = os.path.basename(self.root)
-
-        def pmark(label):
-            if prof:
-                print(f"      [prep {tname} e{epoch_id}] {label} @ "
-                      f"{time.time() - t_prof0:.2f}s (abs {time.time() % 1000:.2f})", flush=True)
-
         snap = self.current()
         if snap.epochs.get(channel, -1) >= epoch_id:
             return None
@@ -1010,7 +1001,6 @@ class SnapshotTable:
             if batch.rdd.getNumPartitions() > target_p:
                 batch = batch.coalesce(target_p)
             batch = batch.localCheckpoint(eager=True)
-            pmark("ckpt")
 
         # multi-match guard (Iceberg rule): the merge silently keeps duplicate
         # key rows if the batch violates the unique-per-key contract, so fail
@@ -1035,7 +1025,6 @@ class SnapshotTable:
             )
 
         touched = [r[0] for r in batch.select("__bucket").distinct().collect()]
-        pmark("touched")
 
         old_files = [f for b in touched for f in snap.files.get(str(b), [])]
         target = self._read_files(old_files, new_schema)
@@ -1074,7 +1063,6 @@ class SnapshotTable:
             merged.repartition(n_write, "__bucket").write.partitionBy(
                 "__bucket"
             ).mode("overwrite").parquet(epoch_dir)
-            pmark("merge_write")
             try:
                 m = obs.get
             except Exception:
@@ -1083,7 +1071,6 @@ class SnapshotTable:
                 # AssertionError (ADVICE r01) — recompute counts directly so
                 # streaming replay can't get permanently stuck on this epoch
                 m = self._merge_counts(src, target, keys)
-            pmark("counts")
 
         # per-bucket lineage from the written layout (footer-free: dir listing)
         new_files = self._list_bucket_files(epoch_dir)
@@ -1106,7 +1093,6 @@ class SnapshotTable:
         }
         epochs = dict(snap.epochs)
         epochs[channel] = epoch_id
-        pmark("done")
         return {
             "base_version": snap.version,
             "schema_json": json.dumps(new_schema.jsonValue()),

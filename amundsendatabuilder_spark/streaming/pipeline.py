@@ -5,13 +5,16 @@ One ``foreachBatch`` application does, per micro-batch (epoch):
 1. **LWW dedup** (``groupBy.max(struct)`` — map-side combine kills dup/skew).
 2. split upserts vs deletes.
 3. **diff against current state**: read the old entity rows for exactly the
-   touched keys (bucket-pruned point lookup) and compute the exact child
-   nodes/relations/docs that the new state no longer produces — these become
-   delete rows. This replaces the reference's publish-then-reap staleness
-   model with an exact incremental diff; the staleness task still exists for
-   shared nodes and disaster recovery.
-4. **MERGE** nodes, relations, search docs — derived tables first.
-5. **MERGE the entity table LAST** — it is the epoch commit marker.
+   touched keys (bucket-pruned point lookup), tag old and new entity rows
+   with their side, and expand them ONCE into nodes and relations. One keyed
+   aggregate per graph table then emits the new row of every key the new
+   state produces and a delete row for every scoped key only the old state
+   produced — the exact child diff. This replaces the reference's
+   publish-then-reap staleness model with an exact incremental diff; the
+   staleness task still exists for shared nodes and disaster recovery.
+4. **prepare** the four MERGEs (nodes, relations, search docs, entities) as
+   one concurrent wave of Spark jobs, then **commit** derived tables first.
+5. **commit the entity table LAST** — it is the epoch commit marker.
 
 Exactly-once: each table keeps a per-channel epoch ledger inside its manifest
 (commit & ledger swap atomically). Derived tables are merged strictly before
@@ -33,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,7 +117,42 @@ def _strip(schema, drop: set[str]):
     return T.StructType([f for f in schema.fields if f.name not in drop])
 
 
+def _child_diff(rows: DataFrame, keys: list[str], delete_keeps: tuple[str, ...],
+                order: tuple[str, ...]) -> DataFrame:
+    """One keyed aggregate over the expansion of side-tagged entity rows
+    (``__new``): per merge key, the new-side row when the new state produces
+    the key (shared keys repeat across entities with a key-determined
+    payload, so any copy is THE row), else a delete row when only old-side
+    SCOPED rows produced it. Delete rows keep ``delete_keeps`` of the old row
+    and null the rest of the payload. Keys only old shared rows produced are
+    left alone (shared nodes are never diff-deleted). ``order`` sorts each
+    partition so the written files keep a key-clustered layout."""
+    payload = [c for c in rows.columns if c not in (*keys, "__new", "scope_key")]
+    has_new = F.col("__has_new")
+    return (
+        rows.groupBy(*keys)
+        .agg(
+            F.max_by(F.struct(*payload), F.col("__new")).alias("__p"),
+            F.max("__new").alias("__has_new"),
+            F.max(~F.col("__new") & F.col("scope_key").isNotNull()).alias("__old_scoped"),
+        )
+        .where(has_new | F.col("__old_scoped"))
+        .select(
+            *keys,
+            *[(F.col(f"__p.{c}") if c in delete_keeps
+               else F.when(has_new, F.col(f"__p.{c}"))).alias(c) for c in payload],
+            (~has_new).alias("__delete"),
+        )
+        .sortWithinPartitions(*order)
+    )
+
+
 class CDCPipeline:
+    # apply_batch prepares its four merges as one concurrent wave at every
+    # width: small epochs are driver-bound (planning), so overlapping the
+    # four plans pays even when one chain's tasks would fill the cores
+    parallel_prepare = True
+
     def __init__(
         self,
         spark: SparkSession,
@@ -121,7 +160,6 @@ class CDCPipeline:
         n_buckets: int = 64,
         cluster: str = K.CLUSTER,
         create_only_labels: tuple[str, ...] = (),
-        parallel_prepare: bool | None = None,
         table_mode: str = "cow",
         compact_every: int = 8,
         compact_max_delta_files: int = 2,
@@ -137,18 +175,6 @@ class CDCPipeline:
         self.table_mode = table_mode
         self.compact_every = compact_every
         self.compact_max_delta_files = compact_max_delta_files
-        # concurrent prepares overlap the four merge job-chains into one wave
-        # — a win whenever cores outnumber one chain's effective tasks
-        # (measured r2: 38s vs 52s per 1M-event replay at local[32]; r3 with
-        # data-sized partitioning the serial chains left local[8] ~50% idle);
-        # only a fully-saturated narrow session gains nothing from it
-        if parallel_prepare is None:
-            env = os.environ.get("SPARK_CDC_PARALLEL_PREPARE")
-            if env is not None:
-                parallel_prepare = env == "1"
-            else:
-                parallel_prepare = spark.sparkContext.defaultParallelism >= 8
-        self.parallel_prepare = parallel_prepare
         # intermediate-frame materialization: "local_checkpoint" (default —
         # fastest; lineage is CUT, so an executor loss on a real cluster
         # fails the epoch and replay re-runs it, which exactly-once absorbs)
@@ -279,15 +305,6 @@ class CDCPipeline:
     def apply_batch(self, batch: DataFrame, epoch_id: int,
                     winners: DataFrame | None = None) -> dict[str, Any]:
         t0 = time.time()
-        dbg = os.environ.get("SPARK_CDC_DEBUG_TIMING")
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if dbg:
-                marks.append((label, round(time.time() - t0, 1)))
-                print(f"    [{epoch_id}] {label} @ {marks[-1][1]}s "
-                      f"(abs {time.time() % 1000:.2f})", flush=True)
-
         if self.repo_files.last_epoch("cdc") >= epoch_id:
             # a replayed compact-boundary epoch must still compact: the
             # crash may have happened after the entity commit (the epoch
@@ -304,8 +321,6 @@ class CDCPipeline:
             f.name for f in self.repo_files.current().schema().fields
             if f.name not in ("content", "publish_tag", "updated_ms")
         ]
-        from concurrent.futures import ThreadPoolExecutor
-
         if winners is not None:
             # pipelined path: dedup was prefetched during the previous epoch;
             # the point lookup keys come from the (small, checkpointed)
@@ -315,7 +330,6 @@ class CDCPipeline:
                     winners.select(*ENTITY_KEYS), columns=feature_cols,
                 )
             )
-            mark("old_state (winners prefetched)")
         else:
             # streaming path: dedup and old-state are independent given the
             # RAW batch's key set (same keys as the dedup output), so they
@@ -335,7 +349,6 @@ class CDCPipeline:
             with ThreadPoolExecutor(max_workers=2) as ex:
                 f_w, f_o = ex.submit(_dedup), ex.submit(_old_state)
                 winners, old_all = f_w.result(), f_o.result()
-            mark("dedup+old_state (concurrent)")
 
         # cross-batch LWW gate (north rule): a batch row takes effect ONLY if
         # its (event_ts, commit) beats the stored row's — batches may arrive
@@ -363,60 +376,40 @@ class CDCPipeline:
             "repo", "path", "commit", "event_ts"
         )
 
-        # each entity frame feeds 3 expansions (nodes/rels/docs) + diffs —
-        # materialize once, expansions become cheap narrow projections
+        # the new entity frame feeds the docs and entity merges and the diff
         new_entities = self._mat(
             extract_entities(upserts, self.cluster).drop("op", "shard", "event_id")
         )
-        mark("extract+ckpt")
-        # diffs only for keys whose state ACTUALLY changes: restrict the old
-        # rows to effective keys (old_all covers all winner keys — children of
-        # gated-out keys must NOT enter the diff or they would be deleted),
-        # live rows only. Narrow ops over the two checkpointed frames.
+        # one side-tagged entity frame feeds the node AND relation diffs. Old
+        # rows are restricted to effective keys (old_all covers all winner
+        # keys — children of gated-out keys must NOT enter the diff or they
+        # would be deleted) and to live rows; `content` is never expanded.
         old_entities = (
             old_all.join(effective.select(*ENTITY_KEYS), ENTITY_KEYS, "left_semi")
             .where(~F.col("is_deleted"))
             .drop("is_deleted")
-            .withColumn("content", F.lit(None).cast("string"))
         )
-
-        new_nodes = validate_nodes(nodes_from_entities(new_entities))
-        new_rels = validate_relations(relations_from_entities(new_entities))
-        old_nodes = validate_nodes(nodes_from_entities(old_entities))
-        old_rels = validate_relations(relations_from_entities(old_entities))
-
-        # exact child diff: scoped rows the old state produced but the new
-        # state no longer does (covers shrunk entities AND deleted entities)
-        node_dels = (
-            old_nodes.where(F.col("scope_key").isNotNull())
-            .join(new_nodes, NODE_KEYS, "left_anti")
-            .select(*NODE_KEYS)
-            .withColumn("__delete", F.lit(True))
+        sides = self._mat(
+            new_entities.drop("content").withColumn("__new", F.lit(True))
+            .unionByName(old_entities.withColumn("__new", F.lit(False)))
         )
-        rel_dels = (
-            old_rels.where(F.col("scope_key").isNotNull())
-            .join(new_rels, REL_KEYS, "left_anti")
-            .select("start_key", "end_key", "type", "start_label", "end_label", "reverse_type")
-            .withColumn("__delete", F.lit(True))
+        side = ("__new",)
+        node_batch = _child_diff(
+            validate_nodes(nodes_from_entities(sides, carry=side)),
+            NODE_KEYS, (), ("label", "key"),
+        ).withColumn(
+            "__create_only",
+            F.col("label").isin(list(self.create_only_labels))
+            if self.create_only_labels
+            else F.lit(False),
+        )
+        rel_batch = _child_diff(
+            validate_relations(relations_from_entities(sides, carry=side)),
+            REL_KEYS, ("start_label", "end_label", "reverse_type"),
+            ("type", "start_key"),
         )
 
         tag = f"epoch_{epoch_id}"
-        node_batch = (
-            new_nodes.drop("scope_key")
-            .withColumn("__delete", F.lit(False))
-            .unionByName(node_dels, allowMissingColumns=True)
-            .withColumn(
-                "__create_only",
-                F.col("label").isin(list(self.create_only_labels))
-                if self.create_only_labels
-                else F.lit(False),
-            )
-        )
-        rel_batch = (
-            new_rels.drop("scope_key")
-            .withColumn("__delete", F.lit(False))
-            .unionByName(rel_dels, allowMissingColumns=True)
-        )
         doc_dels = deletes.select(
             K.table_key(F.col("repo"), F.col("path"), self.cluster).alias("key")
         ).withColumn("__delete", F.lit(True))
@@ -443,12 +436,11 @@ class CDCPipeline:
             deletes.withColumn("is_deleted", F.lit(True)), allowMissingColumns=True
         )
 
-        # prepare all four merges CONCURRENTLY (one wave of Spark jobs — the
-        # serial chain of four merge pipelines left most cores idle), then
+        # prepare all four merges CONCURRENTLY (one wave of Spark jobs), then
         # commit manifests strictly in dependency order: derived tables
         # first, entity table LAST as the epoch commit marker (exactly-once).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # Every batch is a narrow derivation (plus, for the graph tables, one
+        # aggregate) of checkpointed frames, so none is materialized again.
         jobs = {
             "nodes": (self.graph_nodes, node_batch,
                       {"delete_col": "__delete", "create_only_col": "__create_only"}),
@@ -456,42 +448,16 @@ class CDCPipeline:
             "docs": (self.search_documents, doc_batch, {"delete_col": "__delete"}),
             "entities": (self.repo_files, entity_batch, {}),
         }
-        # every batch here is a narrow derivation of the checkpointed
-        # winners/old_all/new_entities frames; materializing them per table
-        # trades one extra job + a map-heavy copy for shallower merge plans
-        # (less driver-serial Catalyst time). Env-switchable per table:
-        # "1" = all, "0" = none (default), or a comma list of table names.
-        # Measured r5 at 1M events: materializing the map-heavy node/rel
-        # expansions costs the WIDE arm disproportionately (4-core epoch
-        # wall 85-97s vs 73s without; 1-core 176 vs 186) — recompute is
-        # cheap CPU, the copy is memory bandwidth, and membw is the
-        # resource that refuses to scale on this host (r4 membw control
-        # 0.698). Scaling efficiency 1->4: ~0.63 unmaterialized vs ~0.49.
-        mat_env = os.environ.get("SPARK_CDC_MAT_BATCH", "0")
-        mat_for = {
-            name: (mat_env == "1" or name in mat_env.split(","))
-            for name in jobs
-        }
-        if self.parallel_prepare:
-            with ThreadPoolExecutor(max_workers=4) as ex:
-                futs = {
-                    name: ex.submit(
-                        tbl.prepare_upsert, b, epoch_id,
-                        channel="cdc", publish_tag=tag,
-                        materialize_batch=mat_for[name], **kw,
-                    )
-                    for name, (tbl, b, kw) in jobs.items()
-                }
-                preps = {name: f.result() for name, f in futs.items()}
-        else:
-            preps = {
-                name: tbl.prepare_upsert(
-                    b, epoch_id, channel="cdc", publish_tag=tag,
-                    materialize_batch=mat_for[name], **kw
+        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+            futs = {
+                name: ex.submit(
+                    tbl.prepare_upsert, b, epoch_id,
+                    channel="cdc", publish_tag=tag,
+                    materialize_batch=False, **kw,
                 )
                 for name, (tbl, b, kw) in jobs.items()
             }
-        mark("prepare_all")
+            preps = {name: f.result() for name, f in futs.items()}
 
         def _commit(name: str) -> dict:
             tbl = jobs[name][0]
@@ -504,10 +470,8 @@ class CDCPipeline:
         m_rels = _commit("rels")
         m_docs = _commit("docs")
         m_ent = _commit("entities")
-        mark("commit_all")
 
         comp = self._maybe_compact(epoch_id)
-        mark("compact")
 
         metrics = {
             "epoch": epoch_id,
@@ -897,8 +861,6 @@ class CDCPipeline:
         touches no table state, so exactly-once and LWW gating are unaffected
         (its output is identical whenever it runs); its tasks fill the
         driver-serial gaps of the in-flight epoch."""
-        from concurrent.futures import ThreadPoolExecutor
-
         def load(p: str) -> DataFrame:
             return self.spark.read.schema(CHANGELOG_SCHEMA).parquet(p)
 

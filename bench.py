@@ -11,10 +11,10 @@ pre-materialized changelog; efficiency = tput_4N / (4 x tput_N).
 Methodology (r2 + r3; full dossier in BENCH.md):
 * IDENTICAL JOB AT BOTH WIDTHS: shuffle partitioning, engine repartition
   targets, file layout, and engine concurrency are pinned
-  (SPARK_CDC_TARGET_PARTITIONS / fixed shuffle partitions / parallel
-  prepares on) so the two arms run the same plan and task set — scaling
-  executors on a real cluster does not change the job (r3; arm task counts
-  are asserted ~equal in the output);
+  (SPARK_CDC_TARGET_PARTITIONS / fixed shuffle partitions; the engine
+  always prepares its merges concurrently) so the two arms run the same
+  plan and task set — scaling executors on a real cluster does not change
+  the job (r3; arm task counts are asserted ~equal in the output);
 * each arm runs in a FRESH subprocess (fresh driver JVM — sequential
   sessions in one JVM degrade up to 2x);
 * arms are interleaved round-robin, per-arm MINIMA reported (the host is
@@ -126,11 +126,6 @@ cores, work, chunks_json, warm_json = (
 chunks = json.loads(chunks_json)
 warm_chunks = json.loads(warm_json)
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-# r5: batch materialization OFF in the replay arms — the map-heavy node/
-# rel expansion copies are pure memory-bandwidth cost and membw is the
-# non-scaling resource on this host (see pipeline.apply_batch comment);
-# override with SPARK_CDC_MAT_BATCH for A/B runs
-os.environ.setdefault("SPARK_CDC_MAT_BATCH", "0")
 # IDENTICAL JOB AT BOTH WIDTHS: on a real cluster the plan (shuffle
 # partitioning, file layout, engine concurrency) is sized to the DATA and
 # held fixed while executors scale N->4N; deriving task counts from the
@@ -138,7 +133,6 @@ os.environ.setdefault("SPARK_CDC_MAT_BATCH", "0")
 # partitions spill while the wide arm pays 4x per-task fixed costs).
 FIXED_PARTITIONS = os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "32")
 os.environ["SPARK_CDC_TARGET_PARTITIONS"] = FIXED_PARTITIONS
-os.environ["SPARK_CDC_PARALLEL_PREPARE"] = "1"
 local_dirs = tempfile.mkdtemp(prefix="sld_", dir=work)
 os.environ["SPARK_LOCAL_DIRS"] = local_dirs
 from amundsendatabuilder_spark.session import get_spark

@@ -229,6 +229,98 @@ def test_duplicate_function_names_single_column_node(spark, tmp_path):
     assert per_key == 0
 
 
+def _graph_sets(pipe):
+    nodes = {(r["key"], r["label"]) for r in pipe.graph_nodes.read().collect()}
+    rels = {(r["start_key"], r["end_key"], r["type"])
+            for r in pipe.graph_relations.read().collect()}
+    return nodes, rels
+
+
+def _expected_graph(files, users):
+    """Exact graph of the live ``files`` {path: (owner, functions, commented)}
+    in repo ``r1``; ``users`` are the shared User nodes ever created."""
+    sch = "repofs://gold.r1"
+    nodes = {("database://repofs", "Database"), ("repofs://gold", "Cluster"),
+             (sch, "Schema")} | {(u, "User") for u in users}
+    rels = {("database://repofs", "repofs://gold", "CLUSTER"),
+            ("repofs://gold", sch, "SCHEMA")}
+    for path, (owner, fns, commented) in files.items():
+        tk = f"{sch}/{path}"
+        nodes |= {(tk, "Table"), (f"{tk}/_description", "Description"),
+                  (f"{tk}/timestamp", "Timestamp"),
+                  (f"{tk}/high_watermark/", "Watermark")}
+        rels |= {(sch, tk, "TABLE"), (tk, f"{tk}/_description", "DESCRIPTION"),
+                 (owner, tk, "OWNER_OF"), (tk, f"{tk}/timestamp", "LAST_UPDATED_AT"),
+                 (f"{tk}/high_watermark/", tk, "BELONG_TO_TABLE")}
+        for fn in fns:
+            nodes.add((f"{tk}/{fn}", "Column"))
+            rels.add((tk, f"{tk}/{fn}", "COLUMN"))
+            if commented:
+                nodes.add((f"{tk}/{fn}/_description", "Description"))
+                rels.add((f"{tk}/{fn}", f"{tk}/{fn}/_description", "DESCRIPTION"))
+    return nodes, rels
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_child_diff_exact_per_epoch(spark, tmp_path, mode):
+    """The per-epoch child diff deletes exactly the scoped nodes/relations
+    the new entity state no longer produces: a shrunk file loses only its
+    dropped column's rows, a stale update changes nothing, a deleted file
+    loses all of its scoped rows while shared nodes stay."""
+    import datetime
+
+    from amundsendatabuilder_spark.sources.changelog import CHANGELOG_SCHEMA
+
+    def body(fns, comment_on):
+        # the extractor pairs trailing comments with functions only when
+        # every function carries one; otherwise no column descriptions
+        return "# module\n" + "".join(
+            f"def {fn}(x):\n    return x{'  # ' + fn + ' doc' if fn in comment_on else ''}\n"
+            for fn in fns)
+
+    def ev(i, day, op, path, commit, content):
+        return (i, datetime.datetime(2024, 1, day), op, "r1", path, commit,
+                "python", content, 0)
+
+    def apply(rows, epoch):
+        pipe.apply_batch(spark.createDataFrame(rows, CHANGELOG_SCHEMA), epoch)
+        return _graph_sets(pipe)
+
+    # owner = user_{int(commit[:4], 16) % 50}: a.py's versions share one owner
+    own_a, own_b = "user_1@example.com", "user_2@example.com"
+    users = {own_a, own_b}
+    a3, b3 = ["alpha", "beta", "gamma"], ["delta", "eps", "zeta"]
+    pipe = CDCPipeline(spark, str(tmp_path / "wh"), n_buckets=4, table_mode=mode)
+
+    first = apply([ev(1, 2, "insert", "a.py", "0001aa", body(a3, a3)),
+                   ev(2, 2, "insert", "b.py", "0002bb", body(b3, ["zeta"]))], 0)
+    assert first == _expected_graph(
+        {"a.py": (own_a, a3, True), "b.py": (own_b, b3, False)}, users)
+
+    # shrink a.py: exactly gamma's Column + Description nodes and its
+    # COLUMN + DESCRIPTION relations go
+    got = apply([ev(3, 3, "update", "a.py", "0001cc", body(a3[:2], a3))], 1)
+    want = _expected_graph(
+        {"a.py": (own_a, a3[:2], True), "b.py": (own_b, b3, False)}, users)
+    assert got == want
+    tk = "repofs://gold.r1/a.py"
+    assert first[0] - got[0] == {(f"{tk}/gamma", "Column"),
+                                 (f"{tk}/gamma/_description", "Description")}
+    assert first[1] - got[1] == {
+        (tk, f"{tk}/gamma", "COLUMN"),
+        (f"{tk}/gamma", f"{tk}/gamma/_description", "DESCRIPTION")}
+
+    # stale update (older than the stored row): the graph does not change
+    before = [state_digest(t.read()) for t in (pipe.graph_nodes, pipe.graph_relations)]
+    assert apply([ev(4, 1, "update", "a.py", "0001dd", body(["omega"], []))], 2) == want
+    assert [state_digest(t.read()) for t in (pipe.graph_nodes, pipe.graph_relations)] == before
+
+    # delete b.py: all of its scoped rows go; shared nodes (its User too)
+    # and a.py's rows stay
+    got = apply([ev(5, 4, "delete", "b.py", "0002ee", None)], 3)
+    assert got == _expected_graph({"a.py": (own_a, a3[:2], True)}, users)
+
+
 def test_usage_channel_wires_search_doc_usage(spark, tmp_path):
     """VERDICT r01: READ usage must flow into search docs (SUM read_count /
     COUNT DISTINCT reader — neo4j_search_data_extractor.py:40-42), accumulate
