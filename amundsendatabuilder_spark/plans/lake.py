@@ -41,10 +41,9 @@ import os
 import time
 import uuid
 import warnings
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -242,21 +241,24 @@ class SnapshotTable:
         return {k: v for k, v in agg.items() if v is not None}
 
     def _attach_stats(self, snap: Snapshot) -> None:
-        """Populate snap.file_stats: carry bounds forward from the parent
-        manifest for files that persist (data files are immutable), read
-        footers only for files new in this commit — O(new files) driver
-        work per commit, which is O(batch), not O(table)."""
-        if os.environ.get("SPARK_CDC_FILE_STATS", "1") == "0":
-            return
-        parent_stats: dict[str, dict] = {}
-        if snap.parent is not None:
-            ppath = os.path.join(self.meta_dir, f"v{snap.parent}.json")
-            if self.io.exists(ppath):
-                parent_stats = Snapshot.from_json(self.io.read(ppath)).file_stats
+        """Populate snap.file_stats: carry bounds forward for files that
+        persist (data files are immutable; a commit derives its snapshot
+        from the parent's, so ``snap.file_stats`` still holds the parent's
+        bounds), read footers only for files new in this commit — O(new
+        files) driver work per commit, which is O(batch), not O(table)."""
+        carried = snap.file_stats
         snap.file_stats = {
-            f: parent_stats[f] if f in parent_stats else self._footer_stats(f)
+            f: carried[f] if f in carried else self._footer_stats(f)
             for f in sorted(set(self._all_files(snap)))
         }
+
+    @staticmethod
+    def _next(snap: Snapshot, **changes: Any) -> Snapshot:
+        """The snapshot that commits on top of ``snap``: every field carries
+        over except the version chain and the ``changes`` given (``_commit``
+        restamps ``committed_at_ms`` and ``file_stats``)."""
+        return replace(snap, version=snap.version + 1, parent=snap.version,
+                       **changes)
 
     def _commit(self, snap: Snapshot) -> None:
         # Compare-and-swap concurrency control for EVERY commit path
@@ -751,16 +753,16 @@ class SnapshotTable:
                 out.append(T.StructField(f.name, SnapshotTable._relax(f.dataType), True))
         return T.StructType(out)
 
-    # ---- merge strategies -------------------------------------------------
+    # ---- merge internals ----------------------------------------------------
 
     def _merge_join(self, src, target, new_schema, keys, n_buckets, tag, now_ms):
-        """Reference strategy: full-outer join on the key, then the caller
+        """The CoW merge: full-outer join on the key, then the caller
         repartitions by bucket for the write (two shuffles)."""
         data_cols = [f.name for f in new_schema.fields]
         # explicit presence flags: the join is null-safe on the keys, so
         # "side present" must NOT be inferred from key-column nullness (a
         # legitimately null-keyed source row would read as absent and take
-        # the target's null payload — diverging from the bucketed strategy)
+        # the target's null payload instead of its own)
         src = src.withColumn("__s_present", F.lit(True)).alias("s")
         target = target.withColumn("__t_present", F.lit(True)).alias("t")
         on = [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
@@ -803,16 +805,14 @@ class SnapshotTable:
         return merged, obs
 
     def _merge_counts(self, src, target, keys) -> dict[str, int]:
-        """Deterministic lineage counts via a direct aggregation (one extra
-        batch-sized job). Used (a) for the ``bucketed`` strategy, where
-        accumulators inside ``mapInPandas`` would double-count on task retries
-        or speculation, and (b) as the fallback when the join strategy's
-        Observation cannot materialize (empty written plan — an all-delete or
-        all-gated-out batch; ADVICE r01)."""
+        """Lineage counts via a direct aggregation (one extra batch-sized
+        job): the fallback when the merge's Observation cannot materialize
+        (empty written plan — an all-delete or all-gated-out batch; ADVICE
+        r01)."""
         t_keys = target.select(*keys).withColumn("__t", F.lit(True))
         # null-safe key equality, matching _merge_join's join condition —
         # a column-name equi-join would count a null-keyed match as an
-        # insert while the join strategy counts it as an update
+        # insert while the merge counts it as an update
         on = [src[k].eqNullSafe(t_keys[k]) for k in keys]
         row = (
             src.join(t_keys, on, "left").drop(*[t_keys[k] for k in keys])
@@ -827,71 +827,6 @@ class SnapshotTable:
         return {k: int(row[k] or 0) for k in
                 ("rows_seen", "rows_inserted", "rows_updated", "rows_deleted")}
 
-    def _merge_bucketed(self, src, target, new_schema, keys, n_buckets, tag, now_ms):
-        """Scale strategy: ONE shuffle. bucket = hash(key) ⇒ repartitioning
-        the (target ∪ batch) union on ``__bucket`` colocates every key; a
-        vectorized pandas reducer picks the winner per key inside each
-        partition and the write is already bucket-aligned. Catalyst cannot
-        know bucket = f(key), so this co-located merge is expressed with
-        ``mapInPandas`` (Arrow-batched) rather than a join. Lineage counts
-        are computed by the caller via :meth:`_merge_counts` (retry-safe)."""
-        data_cols = [f.name for f in new_schema.fields]
-        bexpr = _bucket_expr(keys, n_buckets)
-
-        t_side = target.select(
-            *data_cols,
-            bexpr.alias("__bucket"),
-            F.lit(False).alias("__del"),
-            F.lit(False).alias("__co"),
-            F.lit(0).alias("__src"),
-        )
-        s_side = src.select(
-            *[
-                (F.col(c) if c != "publish_tag" and c != "updated_ms"
-                 else F.lit(None).cast(new_schema[c].dataType)).alias(c)
-                for c in data_cols
-            ],
-            "__bucket", "__del", "__co",
-            F.lit(1).alias("__src"),
-        )
-        unioned = t_side.unionByName(s_side)
-        n_part = max(1, min(n_buckets, engine_parallelism(self.spark) * 2))
-
-        out_schema = T.StructType(
-            new_schema.fields + [T.StructField("__bucket", T.IntegerType())]
-        )
-        key_cols = list(keys)
-        out_names = [f.name for f in out_schema.fields]
-
-        def resolve(batches):
-            pdfs = [b for b in batches]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            pdf["__del"] = pdf["__del"].fillna(False).astype(bool)
-            pdf["__co"] = pdf["__co"].fillna(False).astype(bool)
-            # priority: create-only source (-1) < target (0) < source (1);
-            # a delete row KEEPS priority 1 even when flagged create-only —
-            # matches _merge_join, where __is_del wins over __co (ADVICE r01)
-            pri = pdf["__src"].to_numpy(dtype="int8").copy()
-            pri[(pri == 1) & pdf["__co"].to_numpy() & ~pdf["__del"].to_numpy()] = -1
-            pdf["__pri"] = pri
-            pdf = pdf.sort_values(key_cols + ["__pri"], kind="stable")
-            winners = pdf.drop_duplicates(subset=key_cols, keep="last")
-            out = winners[~winners["__del"].to_numpy()].copy()
-            won = out["__src"].to_numpy() == 1
-            if "publish_tag" in out.columns:
-                out.loc[won, "publish_tag"] = tag
-                out.loc[won, "updated_ms"] = now_ms
-                # mixed null/assigned may have upcast to float — restore long
-                out["updated_ms"] = out["updated_ms"].astype("Int64")
-            yield out[out_names]
-
-        merged = unioned.repartition(n_part, "__bucket").mapInPandas(
-            resolve, schema=out_schema
-        )
-        return merged
-
     # ---- merge (the upsert) ----------------------------------------------
 
     def merge_upsert(
@@ -902,13 +837,12 @@ class SnapshotTable:
         delete_col: str | None = None,
         create_only_col: str | None = None,
         publish_tag: str | None = None,
-        strategy: str = "join",
         check_unique: bool | None = None,
     ) -> dict[str, Any]:
         """Idempotent keyed upsert of one micro-batch: prepare + commit."""
         prep = self.prepare_upsert(
             batch, epoch_id, channel, delete_col, create_only_col, publish_tag,
-            strategy, check_unique,
+            check_unique,
         )
         if prep is None:
             return {"skipped_epoch": epoch_id, "channel": channel}
@@ -922,41 +856,26 @@ class SnapshotTable:
         delete_col: str | None = None,
         create_only_col: str | None = None,
         publish_tag: str | None = None,
-        strategy: str = "join",
         check_unique: bool | None = None,
-        materialize_batch: bool = True,
     ) -> dict[str, Any] | None:
         """Heavy phase of the upsert: compute + write the new data files.
 
-        ``materialize_batch=False`` skips the local checkpoint of the batch:
-        right when the batch is a NARROW derivation of an already-materialized
-        frame (the pipeline's model expansions over checkpointed entities) —
-        recomputing it for the two consumers (bucket scan, merge source) is
-        cheap CPU, while materializing another map-heavy copy costs memory
-        bandwidth, the scarce resource on a many-core box.
-        Thread-safe across DIFFERENT tables — the pipeline prepares all four
-        graph tables concurrently (one Spark job wave instead of four serial
+        Thread-safe across DIFFERENT tables — the pipeline prepares all of
+        an epoch's tables concurrently (one Spark job wave instead of serial
         chains), then commits manifests in dependency order. Returns None if
         the epoch is already applied.
 
         ``batch`` must be unique per key (LWW-dedup upstream — MERGE forbids
         multi-match, same as Iceberg). ``delete_col``: boolean column, true ⇒
         remove the target row. ``create_only_col``: boolean, true ⇒ existing
-        row wins (reference create-only labels). Returns lineage metrics.
+        row wins (reference create-only labels). Returns the prepared
+        commit for :meth:`commit_prepared`; its ``metrics`` carry the lineage
+        counts.
 
-        Physical strategies (same semantics, tests assert identical state):
-
-        * ``join`` (default) — full-outer join on the key (whole-stage
-          codegen, AQE broadcast/skew handling) + repartition-by-bucket
-          write. Two shuffles, but everything stays JVM-side — measured ~7×
-          faster than the pandas path on map-typed node tables, where Arrow
-          materializes millions of per-entry PyObjects.
-        * ``bucketed`` — ONE shuffle: the union of (touched target buckets +
-          batch) is repartitioned on ``__bucket``; since bucket = hash(key),
-          all rows of a key colocate and winners are resolved by a vectorized
-          pandas reducer, with the write already bucket-aligned. Wins for
-          flat/narrow schemas or when shuffle bandwidth (not CPU) is the
-          bottleneck; loses when rows carry map/struct payloads.
+        The batch is not materialized: engine batches are narrow derivations
+        (plus at most one aggregate) of materialized frames, so recomputing
+        them for their few consumers (dup check, touched-bucket scan, merge
+        source) costs less than writing another copy.
         """
         snap = self.current()
         if snap.epochs.get(channel, -1) >= epoch_id:
@@ -965,7 +884,6 @@ class SnapshotTable:
         keys = snap.key_cols
         service_cols = {c for c in (delete_col, create_only_col) if c}
         new_schema = self._evolve(snap.schema(), batch.schema, service_cols)
-        data_cols = [f.name for f in new_schema.fields]
         tag = publish_tag or f"epoch_{epoch_id}"
         now_ms = int(time.time() * 1000)
 
@@ -980,31 +898,15 @@ class SnapshotTable:
         else:
             batch = batch.withColumn("__co", F.coalesce(F.col(create_only_col).cast("boolean"), F.lit(False)))
 
-        # multi-match guard flag resolved first — it feeds the materialization
-        # decision below (default: on under pytest / SPARK_CDC_CHECK_UNIQUE=1;
-        # off in production ingest — one extra batch-sized aggregation job per
-        # table per epoch)
+        # multi-match guard (Iceberg rule): the merge silently keeps duplicate
+        # key rows if the batch violates the unique-per-key contract, so fail
+        # loudly instead when checking is enabled (default: on under pytest /
+        # SPARK_CDC_CHECK_UNIQUE=1; off in production ingest — one extra
+        # batch-sized aggregation job per table per epoch)
         if check_unique is None:
             check_unique = os.environ.get(
                 "SPARK_CDC_CHECK_UNIQUE", "1" if "PYTEST_CURRENT_TEST" in os.environ else "0"
             ) == "1"
-
-        # materialize the batch once WHEN it has several consumers (CoW:
-        # touched-bucket scan + merge join; any mode: the dup-check). The MoR
-        # append with the guard off consumes the batch exactly once — a
-        # checkpoint there is a pure extra job per table per epoch.
-        # coalesce first — model expansions are unions of many narrow frames
-        # and would otherwise checkpoint hundreds of sliver partitions, and
-        # every downstream stage would inherit that task count
-        if materialize_batch and (snap.mode != "mor" or check_unique):
-            target_p = engine_parallelism(self.spark)
-            if batch.rdd.getNumPartitions() > target_p:
-                batch = batch.coalesce(target_p)
-            batch = batch.localCheckpoint(eager=True)
-
-        # multi-match guard (Iceberg rule): the merge silently keeps duplicate
-        # key rows if the batch violates the unique-per-key contract, so fail
-        # loudly instead when checking is enabled
         if check_unique:
             dup = (
                 batch.groupBy(*keys).count().where(F.col("count") > 1)
@@ -1017,100 +919,74 @@ class SnapshotTable:
                 )
 
         if snap.mode == "mor":
-            # the append path never prunes by touched buckets (nothing is
-            # read or rewritten) — buckets_touched comes from the written
-            # file layout, saving one job + collect per table per epoch
-            return self._prepare_mor_append(
-                batch, snap, new_schema, keys, epoch_id, channel, tag, now_ms
-            )
+            files = snap.files
+            deltas, seq, m = self._append_mor(batch, snap, new_schema, epoch_id, tag, now_ms)
+        else:
+            files, m = self._merge_cow(batch, snap, new_schema, epoch_id, tag, now_ms)
+            deltas, seq = {}, snap.seq
+        return {
+            "base_version": snap.version,
+            "schema_json": json.dumps(new_schema.jsonValue()),
+            "files": files,
+            "delta_files": deltas,
+            "seq": seq,
+            "epochs": {**snap.epochs, channel: epoch_id},
+            "metrics": {"epoch": epoch_id, "channel": channel, "publish_tag": tag,
+                        "buckets_total": snap.n_buckets, **m},
+        }
 
+    def _merge_cow(self, batch, snap, new_schema, epoch_id, tag, now_ms):
+        """Copy-on-write merge: read only the buckets the batch touches,
+        full-outer join them with the batch on the key and rewrite them;
+        untouched buckets carry forward by manifest reference. Returns the
+        new bucket → files map and the lineage counts."""
+        keys = snap.key_cols
         touched = [r[0] for r in batch.select("__bucket").distinct().collect()]
-
-        old_files = [f for b in touched for f in snap.files.get(str(b), [])]
-        target = self._read_files(old_files, new_schema)
-
+        target = self._read_files(
+            [f for b in touched for f in snap.files.get(str(b), [])], new_schema)
         s_cols = set(batch.columns)
         src = batch.select(
             *keys,
             "__bucket", "__del", "__co",
             *[
                 (F.col(c) if c in s_cols else F.lit(None).cast(new_schema[c].dataType)).alias(c)
-                for c in data_cols
+                for c in (f.name for f in new_schema.fields)
                 if c not in keys and c not in ("publish_tag", "updated_ms")
             ],
         )
-
-        epoch_dir = os.path.join(self.data_dir, f"e{epoch_id}_{uuid.uuid4().hex[:8]}")
-        if strategy == "bucketed":
-            merged = self._merge_bucketed(
-                src, target, new_schema, keys, snap.n_buckets, tag, now_ms
-            )
-            merged.write.partitionBy("__bucket").mode("overwrite").parquet(epoch_dir)
+        merged, obs = self._merge_join(
+            src, target, new_schema, keys, snap.n_buckets, tag, now_ms
+        )
+        new_files = self._write_buckets(merged, snap, f"e{epoch_id}_")
+        try:
+            m = obs.get
+        except Exception:
+            # empty written plan (all-delete / all-gated-out batch): the
+            # Observation row never materializes and obs.get raises a JVM
+            # AssertionError (ADVICE r01) — recompute counts directly so
+            # streaming replay can't get permanently stuck on this epoch
             m = self._merge_counts(src, target, keys)
-        else:
-            merged, obs = self._merge_join(
-                src, target, new_schema, keys, snap.n_buckets, tag, now_ms
-            )
-            # second shuffle: bucket-align before write → one file per bucket.
-            # Explicit partition count: without it AQE coalesces this exchange
-            # toward the 64MB advisory size and the WRITE stage runs on a
-            # handful of tasks regardless of cluster width (measured: the
-            # biggest low-parallelism span in the epoch). hash(bucket) %
-            # numPartitions keeps each bucket wholly in one task, so the
-            # one-file-per-bucket layout is preserved.
-            n_write = max(1, min(snap.n_buckets,
-                                 engine_parallelism(self.spark) * 2))
-            merged.repartition(n_write, "__bucket").write.partitionBy(
-                "__bucket"
-            ).mode("overwrite").parquet(epoch_dir)
-            try:
-                m = obs.get
-            except Exception:
-                # empty written plan (all-delete / all-gated-out batch): the
-                # Observation row never materializes and obs.get raises a JVM
-                # AssertionError (ADVICE r01) — recompute counts directly so
-                # streaming replay can't get permanently stuck on this epoch
-                m = self._merge_counts(src, target, keys)
-
-        # per-bucket lineage from the written layout (footer-free: dir listing)
-        new_files = self._list_bucket_files(epoch_dir)
         files = dict(snap.files)
         for b in touched:           # touched buckets fully rewritten (CoW)
             files.pop(str(b), None)
-        for b, fl in new_files.items():
-            files[b] = fl
-
-        metrics = {
-            "epoch": epoch_id,
-            "channel": channel,
-            "publish_tag": tag,
+        files.update(new_files)
+        return files, {
             "rows_seen": m.get("rows_seen", 0),
             "rows_inserted": m.get("rows_inserted") or 0,
             "rows_updated": m.get("rows_updated") or 0,
             "rows_deleted": m.get("rows_deleted") or 0,
             "buckets_touched": len(touched),
-            "buckets_total": snap.n_buckets,
-        }
-        epochs = dict(snap.epochs)
-        epochs[channel] = epoch_id
-        return {
-            "base_version": snap.version,
-            "schema_json": json.dumps(new_schema.jsonValue()),
-            "key_cols": keys,
-            "n_buckets": snap.n_buckets,
-            "files": files,
-            "epochs": epochs,
-            "metrics": metrics,
         }
 
-    def _prepare_mor_append(self, batch, snap, new_schema, keys, epoch_id,
-                            channel, tag, now_ms) -> dict[str, Any]:
+    def _append_mor(self, batch, snap, new_schema, epoch_id, tag, now_ms):
         """Merge-on-read write path: ONE shuffle (repartition by bucket), no
         read of existing data, no rewrite — per-epoch cost is O(batch), not
         O(touched table data). Readers resolve winners by ``__seq``;
         ``compact()`` folds deltas into the base asynchronously. This is the
-        10^10-event ingest shape (Iceberg v2 MoR / Hudi MOR equivalent)."""
-        data_cols = [f.name for f in new_schema.fields]
+        10^10-event ingest shape (Iceberg v2 MoR / Hudi MOR equivalent).
+        Returns the new delta map, the merge seq and the lineage counts;
+        ``buckets_touched`` comes from the written layout (nothing is read,
+        so no touched-bucket job runs)."""
         s_cols = set(batch.columns)
         seq = snap.seq + 1
         out = batch.select(
@@ -1120,7 +996,7 @@ class SnapshotTable:
                     else F.lit(now_ms).cast("long").alias(c) if c == "updated_ms"
                     else (F.col(c) if c in s_cols else F.lit(None).cast(new_schema[c].dataType)).alias(c)
                 )
-                for c in data_cols
+                for c in (f.name for f in new_schema.fields)
             ],
             F.lit(seq).alias(MOR_SEQ),
             F.col("__del").alias(MOR_DEL),
@@ -1133,50 +1009,52 @@ class SnapshotTable:
             F.count(F.lit(1)).alias("rows_seen"),
             F.sum(F.col(MOR_DEL).cast("long")).alias("rows_delete_markers"),
         )
-        n_part = max(1, min(snap.n_buckets, engine_parallelism(self.spark) * 2))
-        epoch_dir = os.path.join(self.data_dir, f"d{epoch_id}_{uuid.uuid4().hex[:8]}")
-        out.repartition(n_part, "__bucket").write.partitionBy("__bucket").mode(
-            "overwrite"
-        ).parquet(epoch_dir)
-
-        new_files = self._list_bucket_files(epoch_dir)
+        new_files = self._write_buckets(out, snap, f"d{epoch_id}_")
         deltas = {b: list(fl) for b, fl in snap.delta_files.items()}
         for b, fl in new_files.items():
             deltas.setdefault(b, []).extend(fl)
         try:
             m = obs.get
         except Exception:
-            # empty batch: Observation never materializes (see cow path)
+            # empty batch: Observation never materializes (see _merge_cow)
             row = batch.agg(
                 F.count(F.lit(1)).alias("rows_seen"),
                 F.sum(F.col("__del").cast("long")).alias("rows_delete_markers"),
             ).first()
             m = {k: int(row[k] or 0) for k in ("rows_seen", "rows_delete_markers")}
-        metrics = {
-            "epoch": epoch_id,
-            "channel": channel,
-            "publish_tag": tag,
+        return deltas, seq, {
             "rows_seen": m.get("rows_seen", 0),
             "rows_delete_markers": m.get("rows_delete_markers") or 0,
             "buckets_touched": len(new_files),
-            "buckets_total": snap.n_buckets,
             "mode": "mor",
             "seq": seq,
         }
-        epochs = dict(snap.epochs)
-        epochs[channel] = epoch_id
-        return {
-            "base_version": snap.version,
-            "schema_json": json.dumps(new_schema.jsonValue()),
-            "key_cols": keys,
-            "n_buckets": snap.n_buckets,
-            "files": dict(snap.files),
-            "epochs": epochs,
-            "metrics": metrics,
-            "mode": "mor",
-            "delta_files": deltas,
-            "seq": seq,
-        }
+
+    def _write_buckets(self, df: DataFrame, snap: Snapshot, prefix: str,
+                       sort_keys: tuple[str, ...] | list[str] = (),
+                       max_rows: int = 0) -> dict[str, list[str]]:
+        """Write ``df`` (carrying ``__bucket``) as a fresh bucket-partitioned
+        directory under ``data/{prefix}{uuid}`` and return its bucket →
+        files map — the one writer behind every merge, append, compaction,
+        rewrite and delete. ``sort_keys`` key-sorts rows within each bucket;
+        ``max_rows`` > 0 caps rows per file (a large bucket splits into
+        files covering disjoint key ranges).
+
+        Fan-out: ``min(n_buckets, 2 × engine_parallelism)`` tasks. The
+        explicit count matters: without it AQE coalesces the exchange toward
+        the 64MB advisory size and the write runs on a handful of tasks
+        whatever the cluster width. hash(bucket) % n keeps each bucket
+        wholly in one task, so a bucket gets one file (per ``max_rows``)."""
+        n = max(1, min(snap.n_buckets, 2 * engine_parallelism(self.spark)))
+        out = df.repartition(n, "__bucket")
+        if sort_keys:
+            out = out.sortWithinPartitions("__bucket", *sort_keys)
+        writer = out.write.partitionBy("__bucket").mode("overwrite")
+        if max_rows > 0:
+            writer = writer.option("maxRecordsPerFile", max_rows)
+        out_dir = os.path.join(self.data_dir, f"{prefix}{uuid.uuid4().hex[:8]}")
+        writer.parquet(out_dir)
+        return self._list_bucket_files(out_dir)
 
     def _list_bucket_files(self, out_dir: str) -> dict[str, list[str]]:
         out: dict[str, list[str]] = {}
@@ -1191,18 +1069,17 @@ class SnapshotTable:
         return out
 
     def compact(self, max_delta_files: int = 0,
-                target_file_rows: int | None = None) -> dict[str, Any]:
+                target_file_rows: int = 4_000_000) -> dict[str, Any]:
         """Fold MoR deltas into the base: resolve winners for every bucket
         whose delta count exceeds ``max_delta_files`` and rewrite those
         buckets as base files (winner rows keep their ``__seq``). The
         amortized half of the append-only write path.
 
         Rewritten buckets come out CLUSTERED: rows are key-sorted within
-        each bucket and files are capped at ``target_file_rows`` rows
-        (env ``SPARK_CDC_COMPACT_FILE_ROWS``, default 4M; 0 disables the
-        cap), so a large bucket splits into files covering disjoint key
-        ranges. The manifest's per-file bounds then let ``read_for_keys``
-        / ``read_where`` prune WITHIN a bucket, and parquet row-group
+        each bucket and files are capped at ``target_file_rows`` rows (0
+        disables the cap), so a large bucket splits into files covering
+        disjoint key ranges. The manifest's per-file bounds then let
+        ``read_for_keys`` / ``read_where`` prune WITHIN a bucket, and parquet row-group
         stats become monotone for pushed key predicates — the Hudi/
         Iceberg "write fast, cluster on compaction" layout. The sort is
         deliberately NOT on the hot MoR append path (it would tax every
@@ -1236,20 +1113,8 @@ class SnapshotTable:
         resolved = self._resolve(raw, snap.schema(), keys, keep_service=True).withColumn(
             "__bucket", _bucket_expr(keys, snap.n_buckets)
         )
-        out_dir = os.path.join(self.data_dir, f"c{uuid.uuid4().hex[:8]}")
-        n_part = max(1, min(snap.n_buckets, engine_parallelism(self.spark) * 2))
-        if target_file_rows is None:
-            target_file_rows = int(
-                os.environ.get("SPARK_CDC_COMPACT_FILE_ROWS", "4000000"))
-        writer = (
-            resolved.repartition(n_part, "__bucket")
-            .sortWithinPartitions("__bucket", *keys)
-            .write.partitionBy("__bucket").mode("overwrite")
-        )
-        if target_file_rows > 0:
-            writer = writer.option("maxRecordsPerFile", target_file_rows)
-        writer.parquet(out_dir)
-        new_base = self._list_bucket_files(out_dir)
+        new_base = self._write_buckets(resolved, snap, "c", sort_keys=keys,
+                                       max_rows=target_file_rows)
         base = dict(snap.files)
         deltas = dict(snap.delta_files)
         for b in todo:
@@ -1260,21 +1125,8 @@ class SnapshotTable:
                    "compacted_files": len(files),
                    "compacted_bytes": in_bytes,
                    "output_files": sum(len(fl) for fl in new_base.values())}
-        self._commit(
-            Snapshot(
-                version=snap.version + 1,
-                schema_json=snap.schema_json,
-                key_cols=snap.key_cols,
-                n_buckets=snap.n_buckets,
-                files=base,
-                epochs=dict(snap.epochs),
-                metrics=metrics,
-                parent=snap.version,
-                mode="mor",
-                delta_files=deltas,
-                seq=snap.seq,
-            )
-        )
+        self._commit(self._next(snap, files=base, delta_files=deltas,
+                                metrics=metrics))
         return metrics
 
     def expire_snapshots(
@@ -1383,29 +1235,16 @@ class SnapshotTable:
                 F.lit(False).alias(MOR_DEL),
                 F.lit(False).alias(MOR_CO),
             )
-        out_dir = os.path.join(self.data_dir, f"snap_{uuid.uuid4().hex[:8]}")
-        n_part = max(1, min(snap.n_buckets,
-                            engine_parallelism(self.spark) * 2))
-        out.repartition(n_part, "__bucket").write.partitionBy("__bucket").mode(
-            "overwrite"
-        ).parquet(out_dir)
-        new_files = self._list_bucket_files(out_dir)
+        new_files = self._write_buckets(out, snap, "snap_")
         metrics = {"publish_tag": publish_tag, "snapshot_buckets": len(new_files)}
-        self._commit(
-            Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                key_cols=keys,
-                n_buckets=snap.n_buckets,
-                files=new_files,
-                epochs=dict(snap.epochs),
-                metrics=metrics,
-                parent=snap.version,
-                mode=snap.mode,
-                delta_files={},
-                seq=snap.seq + 1 if snap.mode == "mor" else snap.seq,
-            )
-        )
+        self._commit(self._next(
+            snap,
+            schema_json=json.dumps(new_schema.jsonValue()),
+            files=new_files,
+            delta_files={},
+            seq=snap.seq + 1 if snap.mode == "mor" else snap.seq,
+            metrics=metrics,
+        ))
         return metrics
 
     def commit_prepared(self, prep: dict[str, Any]) -> dict[str, Any]:
@@ -1417,21 +1256,15 @@ class SnapshotTable:
                 f"concurrent commit detected on {self.root}: base "
                 f"{prep['base_version']} != current {snap.version}"
             )
-        self._commit(
-            Snapshot(
-                version=snap.version + 1,
-                schema_json=prep["schema_json"],
-                key_cols=prep["key_cols"],
-                n_buckets=prep["n_buckets"],
-                files=prep["files"],
-                epochs=prep["epochs"],
-                metrics=prep["metrics"],
-                parent=snap.version,
-                mode=prep.get("mode", snap.mode),
-                delta_files=prep.get("delta_files", {}),
-                seq=prep.get("seq", snap.seq),
-            )
-        )
+        self._commit(self._next(
+            snap,
+            schema_json=prep["schema_json"],
+            files=prep["files"],
+            delta_files=prep["delta_files"],
+            seq=prep["seq"],
+            epochs=prep["epochs"],
+            metrics=prep["metrics"],
+        ))
         return prep["metrics"]
 
     # ---- delete (staleness path) ----------------------------------------
@@ -1495,12 +1328,7 @@ class SnapshotTable:
                 .where(~F.coalesce(cond, F.lit(False)))  # null cond ⇒ keep
                 .withColumn("__bucket", bexpr)
             )
-        out_dir = os.path.join(self.data_dir, f"del_{uuid.uuid4().hex[:8]}")
-        kept.repartition("__bucket").write.partitionBy("__bucket").mode(
-            "overwrite"
-        ).parquet(out_dir)
-
-        new_files = self._list_bucket_files(out_dir)
+        new_files = self._write_buckets(kept, snap, "del_")
         nf = dict(snap.files)
         deltas = dict(snap.delta_files)
         for b in touched:
@@ -1512,21 +1340,8 @@ class SnapshotTable:
             "buckets_touched": len(touched),
             "deleted_per_bucket": {str(r["b"]): r["n"] for r in per_bucket},
         }
-        self._commit(
-            Snapshot(
-                version=snap.version + 1,
-                schema_json=snap.schema_json,
-                key_cols=snap.key_cols,
-                n_buckets=snap.n_buckets,
-                files=nf,
-                epochs=dict(snap.epochs),
-                metrics=metrics,
-                parent=snap.version,
-                mode=snap.mode,
-                delta_files=deltas,
-                seq=snap.seq,
-            )
-        )
+        self._commit(self._next(snap, files=nf, delta_files=deltas,
+                                metrics=metrics))
         return metrics
 
 

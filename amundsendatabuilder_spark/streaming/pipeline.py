@@ -148,9 +148,10 @@ def _child_diff(rows: DataFrame, keys: list[str], delete_keeps: tuple[str, ...],
 
 
 class CDCPipeline:
-    # apply_batch prepares its four merges as one concurrent wave at every
-    # width: small epochs are driver-bound (planning), so overlapping the
-    # four plans pays even when one chain's tasks would fill the cores
+    # every channel prepares its merges as one concurrent wave at every
+    # width (_merge_wave): small epochs are driver-bound (planning), so
+    # overlapping the plans pays even when one chain's tasks would fill the
+    # cores
     parallel_prepare = True
 
     def __init__(
@@ -292,6 +293,30 @@ class CDCPipeline:
             return df
         return df.localCheckpoint(eager=True)
 
+    def _merge_wave(self, jobs: dict[str, tuple], epoch_id: int, channel: str,
+                    tag: str) -> dict[str, Any]:
+        """Apply one epoch's merges: ``jobs`` maps a name to ``(table,
+        batch, merge kwargs)``. Every table is prepared concurrently (one
+        wave of Spark jobs — each prepare writes a different table), then
+        the manifests commit strictly in ``jobs`` order: derived tables
+        first, the channel's epoch-marker table LAST. A crash between two
+        commits leaves the marker unset, so the replayed epoch recomputes
+        the same merges and the tables that already committed skip via their
+        ledger (exactly-once). Returns each table's commit metrics by name."""
+        def prepare(tbl, b, kw):
+            return tbl.prepare_upsert(b, epoch_id, channel=channel,
+                                      publish_tag=tag, **kw)
+
+        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+            futs = {name: ex.submit(prepare, *job) for name, job in jobs.items()}
+            preps = {name: f.result() for name, f in futs.items()}
+        return {
+            name: ({"skipped_epoch": epoch_id, "channel": channel}
+                   if preps[name] is None
+                   else tbl.commit_prepared(preps[name]))
+            for name, (tbl, _b, _kw) in jobs.items()
+        }
+
     # -- the foreachBatch body -------------------------------------------
 
     def prepare_winners(self, batch: DataFrame) -> DataFrame:
@@ -322,7 +347,7 @@ class CDCPipeline:
             if f.name not in ("content", "publish_tag", "updated_ms")
         ]
         if winners is not None:
-            # pipelined path: dedup was prefetched during the previous epoch;
+            # prefetched path: dedup ran during the previous epoch;
             # the point lookup keys come from the (small, checkpointed)
             # winners frame — no raw-batch rescan at all
             old_all = self._mat(
@@ -436,51 +461,19 @@ class CDCPipeline:
             deletes.withColumn("is_deleted", F.lit(True)), allowMissingColumns=True
         )
 
-        # prepare all four merges CONCURRENTLY (one wave of Spark jobs), then
-        # commit manifests strictly in dependency order: derived tables
-        # first, entity table LAST as the epoch commit marker (exactly-once).
-        # Every batch is a narrow derivation (plus, for the graph tables, one
-        # aggregate) of checkpointed frames, so none is materialized again.
-        jobs = {
-            "nodes": (self.graph_nodes, node_batch,
-                      {"delete_col": "__delete", "create_only_col": "__create_only"}),
-            "rels": (self.graph_relations, rel_batch, {"delete_col": "__delete"}),
-            "docs": (self.search_documents, doc_batch, {"delete_col": "__delete"}),
-            "entities": (self.repo_files, entity_batch, {}),
-        }
-        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-            futs = {
-                name: ex.submit(
-                    tbl.prepare_upsert, b, epoch_id,
-                    channel="cdc", publish_tag=tag,
-                    materialize_batch=False, **kw,
-                )
-                for name, (tbl, b, kw) in jobs.items()
-            }
-            preps = {name: f.result() for name, f in futs.items()}
-
-        def _commit(name: str) -> dict:
-            tbl = jobs[name][0]
-            p = preps[name]
-            if p is None:
-                return {"skipped_epoch": epoch_id, "channel": "cdc"}
-            return tbl.commit_prepared(p)
-
-        m_nodes = _commit("nodes")
-        m_rels = _commit("rels")
-        m_docs = _commit("docs")
-        m_ent = _commit("entities")
+        # the entity table commits LAST: it is the epoch commit marker
+        committed = self._merge_wave({
+            "graph_nodes": (self.graph_nodes, node_batch,
+                            {"delete_col": "__delete", "create_only_col": "__create_only"}),
+            "graph_relations": (self.graph_relations, rel_batch, {"delete_col": "__delete"}),
+            "search_documents": (self.search_documents, doc_batch, {"delete_col": "__delete"}),
+            "repo_files": (self.repo_files, entity_batch, {}),
+        }, epoch_id, "cdc", tag)
 
         comp = self._maybe_compact(epoch_id)
 
-        metrics = {
-            "epoch": epoch_id,
-            "wall_sec": round(time.time() - t0, 3),
-            "repo_files": m_ent,
-            "graph_nodes": m_nodes,
-            "graph_relations": m_rels,
-            "search_documents": m_docs,
-        }
+        metrics = {"epoch": epoch_id, "wall_sec": round(time.time() - t0, 3),
+                   **committed}
         if comp is not None:
             metrics["compaction"] = comp
         with open(os.path.join(self.metrics_dir, f"epoch_{epoch_id}.json"), "w") as f:
@@ -561,26 +554,13 @@ class CDCPipeline:
         ).drop("scope_key")
         doc_batch = docs_from_entities(ents, usage_rows)
 
-        jobs = {
-            "nodes": (self.graph_nodes, node_batch,
-                      {"create_only_col": None}),
+        committed = self._merge_wave({
+            "nodes": (self.graph_nodes, node_batch, {}),
             "rels": (self.graph_relations, rel_batch, {}),
             "docs": (self.search_documents, doc_batch, {}),
             "usage": (self.table_usage, usage_rows, {}),
-        }
-        preps = {
-            name: tbl.prepare_upsert(b, epoch_id, channel="usage",
-                                     publish_tag=tag,
-                                     materialize_batch=False, **kw)
-            for name, (tbl, b, kw) in jobs.items()
-        }
-        out: dict[str, Any] = {"epoch": epoch_id}
-        for name in ("nodes", "rels", "docs", "usage"):
-            p = preps[name]
-            out[name] = (
-                {"skipped_epoch": epoch_id} if p is None
-                else jobs[name][0].commit_prepared(p)
-            )
+        }, epoch_id, "usage", tag)
+        out: dict[str, Any] = {"epoch": epoch_id, **committed}
         comp = self._maybe_compact(epoch_id)
         if comp is not None:
             out["compaction"] = comp
@@ -677,25 +657,12 @@ class CDCPipeline:
         )
 
         tag = f"sessions_epoch_{epoch_id}"
-        jobs = {
+        committed = self._merge_wave({
             "sessions": (self.user_sessions, out, {}),
             "state": (self.session_state, state, {}),
-        }
-        preps = {
-            name: tbl.prepare_upsert(df, epoch_id, channel="sessions",
-                                     publish_tag=tag,
-                                     materialize_batch=False, **kw)
-            for name, (tbl, df, kw) in jobs.items()
-        }
-        res: dict[str, Any] = {"epoch": epoch_id, "publish_tag": tag}
-        for name in ("sessions", "state"):
-            p = preps[name]
-            res[name] = (
-                {"skipped_epoch": epoch_id} if p is None
-                else jobs[name][0].commit_prepared(p)
-            )
+        }, epoch_id, "sessions", tag)
         self._maybe_compact(epoch_id)
-        return res
+        return {"epoch": epoch_id, "publish_tag": tag, **committed}
 
     def apply_catalog(self, scan: DataFrame, epoch_id: int,
                       fs_last_updated: DataFrame | None = None) -> dict[str, Any]:
@@ -780,27 +747,12 @@ class CDCPipeline:
         if self.graph_relations.last_epoch(channel) >= epoch_id:
             return {"epoch": epoch_id, "skipped": True}
         tag = f"{channel}_epoch_{epoch_id}"
-        jobs = {
-            "nodes": (self.graph_nodes,
-                      validate_nodes(nodes).drop("scope_key"),
-                      {"create_only_col": None}),
+        committed = self._merge_wave({
+            "nodes": (self.graph_nodes, validate_nodes(nodes).drop("scope_key"), {}),
             "rels": (self.graph_relations,
                      validate_relations(rels).drop("scope_key"), {}),
-        }
-        preps = {
-            name: tbl.prepare_upsert(b, epoch_id, channel=channel,
-                                     publish_tag=tag,
-                                     materialize_batch=False, **kw)
-            for name, (tbl, b, kw) in jobs.items()
-        }
-        out: dict[str, Any] = {"epoch": epoch_id, "publish_tag": tag}
-        for name in ("nodes", "rels"):
-            p = preps[name]
-            out[name] = (
-                {"skipped_epoch": epoch_id} if p is None
-                else jobs[name][0].commit_prepared(p)
-            )
-        return out
+        }, epoch_id, channel, tag)
+        return {"epoch": epoch_id, "publish_tag": tag, **committed}
 
     # -- search snapshot publish (ElasticsearchPublisher equivalent) --------
 
@@ -853,11 +805,11 @@ class CDCPipeline:
 
     # -- runners ------------------------------------------------------------
 
-    def replay_batches(self, chunk_paths: list[str], start_epoch: int = 0,
-                       pipelined: bool = True) -> list[dict]:
+    def replay_batches(self, chunk_paths: list[str],
+                       start_epoch: int = 0) -> list[dict]:
         """Batch-mode replay: one epoch per parquet chunk (resumable — applied
-        epochs no-op via the ledger). ``pipelined``: prefetch chunk i+1's
-        scan + LWW dedup on a side thread while epoch i merges — the prefetch
+        epochs no-op via the ledger). Chunk i+1's scan + LWW dedup is
+        prefetched on a side thread while epoch i merges — the prefetch
         touches no table state, so exactly-once and LWW gating are unaffected
         (its output is identical whenever it runs); its tasks fill the
         driver-serial gaps of the in-flight epoch."""
@@ -865,11 +817,6 @@ class CDCPipeline:
             return self.spark.read.schema(CHANGELOG_SCHEMA).parquet(p)
 
         out: list[dict] = []
-        if not pipelined:
-            for i, p in enumerate(chunk_paths):
-                out.append(self.apply_batch(load(p), start_epoch + i))
-            return out
-
         with ThreadPoolExecutor(max_workers=1) as ex:
             fut = ex.submit(self.prepare_winners, load(chunk_paths[0])) \
                 if chunk_paths else None

@@ -115,28 +115,29 @@ def test_cow_only_touched_buckets(spark, warehouse):
     assert len(unchanged) == len(before) - 1  # only one bucket rewritten
 
 
-def test_merge_strategies_equivalent(spark, warehouse):
-    """bucketed (1-shuffle pandas reducer) == join (full-outer) state."""
-    lake = SnapshotLake(spark, warehouse)
-    for strat in ("bucketed", "join"):
-        t = lake.create_table(f"t_{strat}", SCHEMA, ["key"], n_buckets=8)
-        t.merge_upsert(
-            spark.createDataFrame([(f"k{i}", "A", i) for i in range(50)], SCHEMA),
-            0, strategy=strat,
-        )
-        batch = spark.createDataFrame(
-            [(f"k{i}", "B", i * 10, i % 3 == 0) for i in range(30, 70)],
-            T.StructType(SCHEMA.fields + [T.StructField("d", T.BooleanType())]),
-        )
-        m = t.merge_upsert(batch, 1, delete_col="d", strategy=strat)
-        assert m["rows_seen"] == 40
-    a = {r["key"]: (r["name"], r["v"], r["publish_tag"]) for r in lake.table("t_bucketed").read().collect()}
-    b = {r["key"]: (r["name"], r["v"], r["publish_tag"]) for r in lake.table("t_join").read().collect()}
-    assert a == b
-    ma = lake.table("t_bucketed").current().metrics
-    mb = lake.table("t_join").current().metrics
-    for k in ("rows_inserted", "rows_updated", "rows_deleted"):
-        assert ma[k] == mb[k], (k, ma, mb)
+def test_cow_merge_exact_state_and_counts(spark, warehouse):
+    """The CoW join merge against hand-computed state and lineage counts:
+    50 seed rows, then a 40-row batch over k30..k69 deleting every key with
+    i % 3 == 0. Seed keys outside the batch keep their epoch-0 row; batch
+    keys that existed are updated (13) or deleted (30, 33, …, 48: 7); new
+    keys are inserted (13) and deletes of absent keys are no-ops."""
+    lake, t = _mk(spark, warehouse)
+    t.merge_upsert(
+        spark.createDataFrame([(f"k{i}", "A", i) for i in range(50)], SCHEMA), 0
+    )
+    batch = spark.createDataFrame(
+        [(f"k{i}", "B", i * 10, i % 3 == 0) for i in range(30, 70)],
+        T.StructType(SCHEMA.fields + [T.StructField("d", T.BooleanType())]),
+    )
+    m = t.merge_upsert(batch, 1, delete_col="d")
+    got = {r["key"]: (r["name"], r["v"], r["publish_tag"]) for r in t.read().collect()}
+    want = {f"k{i}": ("A", i, "epoch_0") for i in range(30)}
+    want.update({f"k{i}": ("B", i * 10, "epoch_1") for i in range(30, 70) if i % 3})
+    assert got == want
+    counts = {"rows_seen": 40, "rows_inserted": 13, "rows_updated": 13,
+              "rows_deleted": 7}
+    assert {k: m[k] for k in counts} == counts
+    assert {k: t.current().metrics[k] for k in counts} == counts
 
 
 def test_mor_merge_semantics(spark, warehouse):
@@ -240,29 +241,26 @@ def test_mor_delete_then_create_only_matches_cow(spark, warehouse):
     assert got["cow"] == got["mor"] == {"a": ("v2", 2)}
 
 
-def test_delete_wins_over_create_only_both_strategies(spark, warehouse):
+def test_delete_wins_over_create_only_cow_and_mor(spark, warehouse):
     """ADVICE r01: a source row with both __del and __co set deletes the
-    target row under every physical strategy."""
+    target row, in CoW and in MoR."""
     lake = SnapshotLake(spark, warehouse)
     both = T.StructType(
         SCHEMA.fields
         + [T.StructField("d", T.BooleanType()), T.StructField("co", T.BooleanType())]
     )
-    for strat in ("join", "bucketed"):
-        t = lake.create_table(f"dco_{strat}", SCHEMA, ["key"], n_buckets=4)
-        t.merge_upsert(spark.createDataFrame([("a", "v1", 1)], SCHEMA), 0, strategy=strat)
-        b = spark.createDataFrame([("a", "v2", 2, True, True)], both)
-        m = t.merge_upsert(b, 1, delete_col="d", create_only_col="co", strategy=strat)
-        assert m["rows_deleted"] == 1, strat
-        assert t.read().count() == 0, strat
-    # and in mor mode
-    t = lake.create_table("dco_mor", SCHEMA, ["key"], n_buckets=4, mode="mor")
-    t.merge_upsert(spark.createDataFrame([("a", "v1", 1)], SCHEMA), 0)
-    t.merge_upsert(
-        spark.createDataFrame([("a", "v2", 2, True, True)], both),
-        1, delete_col="d", create_only_col="co",
-    )
-    assert t.read().count() == 0
+    for mode in ("cow", "mor"):
+        t = lake.create_table(f"dco_{mode}", SCHEMA, ["key"], n_buckets=4, mode=mode)
+        t.merge_upsert(spark.createDataFrame([("a", "v1", 1)], SCHEMA), 0)
+        m = t.merge_upsert(
+            spark.createDataFrame([("a", "v2", 2, True, True)], both),
+            1, delete_col="d", create_only_col="co",
+        )
+        if mode == "cow":
+            assert m["rows_deleted"] == 1
+        else:
+            assert m["rows_delete_markers"] == 1
+        assert t.read().count() == 0, mode
 
 
 def test_duplicate_key_batch_fails_loudly(spark, warehouse):

@@ -110,6 +110,78 @@ def test_crash_between_table_commits_heals(spark, tmp_path, chunks):
     assert got == want
 
 
+@pytest.mark.parametrize("channel", ["usage", "graph"])
+def test_crash_between_wave_commits_heals(spark, tmp_path, channel):
+    """Every channel commits through the same prepare→commit wave: a crash
+    after the derived tables committed but before the channel's epoch-marker
+    table (table_usage for usage, graph_relations for a graph channel)
+    converges, on replay of the epoch, to the state of an uncrashed run."""
+    import datetime
+
+    from amundsendatabuilder_spark.operators.models import NODE_SCHEMA, REL_SCHEMA
+    from amundsendatabuilder_spark.sources.changelog import CHANGELOG_SCHEMA
+    from amundsendatabuilder_spark.streaming.pipeline import USAGE_SCHEMA
+
+    tables = ("repo_files", "graph_nodes", "graph_relations",
+              "search_documents", "table_usage")
+    if channel == "usage":
+        marker, derived, ledger = "table_usage", (
+            "graph_nodes", "graph_relations", "search_documents"), "usage"
+    else:
+        marker, derived, ledger = "graph_relations", ("graph_nodes",), "fixture"
+
+    def pipeline(name):
+        pipe = CDCPipeline(spark, str(tmp_path / name), n_buckets=4)
+        if channel == "usage":  # two live tables for usage to land on
+            ts = datetime.datetime(2024, 1, 2)
+            pipe.apply_batch(spark.createDataFrame(
+                [(1, ts, "insert", "r1", "p1", "c1", "python",
+                  "def f(x):\n    return x  # alpha\n", 0),
+                 (2, ts, "insert", "r1", "p2", "c2", "python",
+                  "def g(x):\n    return x  # beta\n", 0)], CHANGELOG_SCHEMA), 0)
+        return pipe
+
+    def apply(pipe, epoch):
+        if channel == "usage":
+            rows = ([("r1", "p1", "alice@x.com", 3), ("r1", "p2", "bob@x.com", 2)]
+                    if epoch == 0 else
+                    [("r1", "p1", "alice@x.com", 4), ("r1", "p1", "carol@x.com", 1)])
+            return pipe.apply_usage(spark.createDataFrame(rows, USAGE_SCHEMA), epoch)
+        nodes = spark.createDataFrame(
+            [(f"t{j}", "Table", {"name": f"t{j}_e{epoch}"}, {}, None)
+             for j in range(epoch, epoch + 3)], NODE_SCHEMA)
+        rels = spark.createDataFrame(
+            [(f"t{j}", "Table", f"u{j}", "User", "READ_BY", "READ",
+              {"read_count": str(epoch)}, {}, None)
+             for j in range(epoch, epoch + 3)], REL_SCHEMA)
+        return pipe.apply_graph(nodes, rels, epoch, channel=ledger)
+
+    def digests(pipe):
+        return [state_digest(getattr(pipe, t).read(), exclude=("updated_ms",))
+                for t in tables]
+
+    clean = pipeline("clean")
+    apply(clean, 0)
+    apply(clean, 1)
+
+    crashy = pipeline("crashy")
+    apply(crashy, 0)
+    tbl = getattr(crashy, marker)
+    orig = tbl.commit_prepared
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash")
+    tbl.commit_prepared = boom
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        apply(crashy, 1)
+    tbl.commit_prepared = orig
+    assert [getattr(crashy, t).last_epoch(ledger) for t in derived] == [1] * len(derived)
+    assert tbl.last_epoch(ledger) == 0
+    # replay the crashed epoch: committed tables skip, the marker commits
+    apply(crashy, 1)
+    assert tbl.last_epoch(ledger) == 1
+    assert digests(crashy) == digests(clean)
+
+
 def test_streaming_resume_from_checkpoint(spark, tmp_path, chunks):
     paths, _ = chunks
     import shutil
