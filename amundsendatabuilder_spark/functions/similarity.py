@@ -372,7 +372,9 @@ def ivf_topk(
     corpus is never shuffled: the query side (exploded ×nprobe) is
     broadcast, so candidate generation is a broadcast hash join on the
     cell id against the map-side corpus scan; only the final per-query
-    top-k (candidate-sized, not corpus-sized) shuffles.  Recall improves
+    top-k (candidate-sized, not corpus-sized) shuffles.  A corpus row sits
+    in one cell and a query's probe cells are distinct, so no (query,
+    neighbor) pair repeats and candidates need no dedup.  Recall improves
     with ``nprobe`` (exact when nprobe = n_centroids — every cell probed).
     """
     cents = kmeans_centroids(corpus, id_col=id_col, vec_col=vec_col,
@@ -385,7 +387,6 @@ def ivf_topk(
         c.join(F.broadcast(q), "cluster")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "q_vec", "c_vec")
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = cand.select(
         "query_id", "neighbor_id",

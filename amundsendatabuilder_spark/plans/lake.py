@@ -1,4 +1,5 @@
-"""Snapshot lake — keyed, bucketed, copy-on-write tables with atomic commits.
+"""Snapshot lake — keyed, bucketed tables (copy-on-write or merge-on-read)
+with atomic commits.
 
 This is the engine's Iceberg-equivalent storage layer (no Iceberg jars exist
 in this sandbox, so the table format is built here from first principles; the
@@ -21,6 +22,14 @@ semantics mirror Iceberg v2 copy-on-write MERGE):
   design point with B=4096, a batch touching 1% of keys reads+rewrites ~1% of
   the table; the join shuffles only (touched data + batch), the small batch
   side broadcasts under AQE, and skewed buckets split via AQE skew-join.
+* **merge-on-read** (``mode="mor"``): a merge only appends one delta file
+  per touched bucket; every row carries ``__seq`` (the merge counter),
+  ``__mor_deleted`` and ``__mor_create_only``. Reads resolve each key in ONE
+  ``groupBy(keys)`` pass (latest delete cut, latest normal row, create-only
+  rows; see ``_resolve``), and ``compact()`` folds deltas back into base
+  files whose rows keep the winners' ``__seq``/``__mor_create_only``. A
+  point lookup pins its bucket with a driver-side XXH64 equal to Spark's,
+  so scan planning runs no Spark job.
 * **schema evolution**: additive only — new batch columns are appended to the
   table schema; old files are read through the evolved schema (missing →
   null), mirroring Iceberg's safe additive evolution and the reference's
@@ -58,6 +67,90 @@ MOR_CO = "__mor_create_only"   # first-writer-wins row (create-only labels)
 
 def _bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+
+
+# Spark's XXH64 (catalyst ``XXH64``/``XxHash64Function``) on the driver, so a
+# point lookup pins its bucket without a Spark job. Arithmetic is mod 2^64.
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xx_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xx_fmix(h: int) -> int:
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _xx_lane8(h: int, k: int) -> int:
+    return (_rotl(h ^ _xx_round(0, k), 27) * _P1 + _P4) & _M64
+
+
+def _xx_lane4(h: int, k: int) -> int:
+    return (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+
+
+def _xx_bytes(b: bytes, seed: int) -> int:      # hashUnsafeBytes
+    n, i = len(b), 0
+    h = (seed + _P5) & _M64
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_xx_round(v[j], int.from_bytes(b[i + 8 * j:i + 8 * j + 8], "little"))
+                 for j in range(4)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xx_round(0, x)) * _P1 + _P4) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h, i = _xx_lane8(h, int.from_bytes(b[i:i + 8], "little")), i + 8
+    if i + 4 <= n:
+        h, i = _xx_lane4(h, int.from_bytes(b[i:i + 4], "little")), i + 4
+    for c in b[i:]:
+        h = _rotl(h ^ (c * _P5 & _M64), 11) * _P1 & _M64
+    return _xx_fmix(h)
+
+
+_INT_RANGE = {T.ByteType: 7, T.ShortType: 15, T.IntegerType: 31, T.LongType: 63}
+
+
+def _driver_bucket(values: list, types: list[T.DataType], n_buckets: int) -> int | None:
+    """``pmod(xxhash64(values…), n_buckets)`` computed in Python: the hash
+    chains over the key columns from seed 42 and skips nulls, as Spark's
+    does. Returns None for a key type it does not cover (the caller then
+    skips bucket pruning). A literal whose Python type does not match its
+    column raises: a coerced literal would hash into the wrong bucket."""
+    h = 42
+    for v, dt in zip(values, types):
+        if v is None:
+            continue
+        if isinstance(dt, T.StringType):
+            if not isinstance(v, str):
+                raise TypeError(f"key literal {v!r} does not match {dt}")
+            if dt != T.StringType():  # collated strings hash a sort key
+                return None
+            h = _xx_bytes(v.encode("utf-8"), h)
+        elif type(dt) in _INT_RANGE:
+            bits = _INT_RANGE[type(dt)]
+            if not isinstance(v, int) or isinstance(v, bool) \
+                    or not -(1 << bits) <= v < (1 << bits):
+                raise TypeError(f"key literal {v!r} does not match {dt}")
+            h = _xx_fmix(  # hashLong: one 8-byte lane; hashInt: one 4-byte lane
+                _xx_lane8((h + _P5 + 8) & _M64, v & _M64) if bits == 63
+                else _xx_lane4((h + _P5 + 4) & _M64, v & 0xFFFFFFFF))
+        else:
+            return None
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 def engine_parallelism(spark: SparkSession) -> int:
@@ -300,66 +393,61 @@ class SnapshotTable:
             ]
         )
 
-    def _live_rows(self, raw: DataFrame, keys: list[str]) -> DataFrame:
-        """Rows that are still in play per key: everything after the latest
-        delete marker (the "delete cut"). Two-step resolve so MoR matches CoW
-        full-outer-join semantics for create-only rows written AFTER a delete
-        (a co row must re-create the key once a delete emptied it), regardless
-        of compaction timing. The cut scan is column-pruned (keys+seq+del);
-        the join shuffles on the key and the downstream groupBy reuses that
-        partitioning."""
-        dm = F.coalesce(F.col(MOR_DEL), F.lit(False))
-        cuts = (
-            raw.where(dm)
-            .groupBy(*keys)
-            .agg(F.max(MOR_SEQ).alias("__cut"))
-        )
-        return (
-            raw.join(cuts, keys, "left")
-            .where(
-                ~dm & (F.col("__cut").isNull() | (F.col(MOR_SEQ) > F.col("__cut")))
-            )
-            .drop("__cut")
-        )
-
-    def _resolve(self, raw: DataFrame, schema: T.StructType,
+    @staticmethod
+    def _resolve(raw: DataFrame, schema: T.StructType,
                  keys: list[str], keep_service: bool = False) -> DataFrame:
-        """MoR read-side LWW over the live rows: winner per key = max __seq
-        for normal rows, min __seq for create-only rows (first writer wins —
-        a later non-co row always beats any co row because its seq is
-        positive). One aggregation with map-side partial combine.
-        ``keep_service`` keeps the winner's __seq/__del/__co columns (used by
-        compaction so rewritten base rows preserve their merge order)."""
+        """MoR read-side LWW in ONE keyed aggregate over the raw rows
+        (Iceberg-equality-delete / Hudi-log-merge shape). Per key it keeps:
+
+        * ``__cut`` — the latest delete marker's ``__seq``; only rows
+          written after it are in play;
+        * ``__nc`` — the latest normal (neither delete nor create-only) row;
+        * ``__cos`` — every create-only row.
+
+        The winner is ``__nc`` if it is after the cut: a normal row beats
+        every create-only row. Otherwise it is the EARLIEST create-only row
+        after the cut (first writer wins; a co row written after a delete
+        re-creates the key, matching CoW's keyed merge whatever
+        the compaction timing). Otherwise the key has no row. The earliest
+        co row is picked by a fold, not a sort: payload structs may carry
+        maps, which are not orderable. ``keep_service`` also emits the
+        winner's ``__seq``/``__co`` (compaction rewrites keep merge order)."""
         payload = [f.name for f in schema.fields if f.name not in keys]
-        live = self._live_rows(raw, keys)
-        eff_seq = F.when(
-            F.coalesce(F.col(MOR_CO), F.lit(False)), -F.col(MOR_SEQ)
-        ).otherwise(F.col(MOR_SEQ))
-        # max_by: ordering key must be orderable, but the VALUE may carry
-        # maps/arrays (node attribute maps are not comparable types)
-        service = (
-            [
-                F.col(MOR_SEQ).alias(MOR_SEQ),
-                F.coalesce(F.col(MOR_CO), F.lit(False)).alias(MOR_CO),
-            ]
-            if keep_service
-            else []
+        dele = F.coalesce(F.col(MOR_DEL), F.lit(False))
+        co = F.coalesce(F.col(MOR_CO), F.lit(False))
+        row = F.struct(F.col(MOR_SEQ).alias(MOR_SEQ), *[F.col(c) for c in payload])
+        row_t = SnapshotTable._relax(T.StructType(
+            [T.StructField(MOR_SEQ, T.LongType())]
+            + [schema[c] for c in payload]))
+        nc = ~dele & ~co
+        agg = raw.groupBy(*keys).agg(
+            F.max(F.when(dele, F.col(MOR_SEQ))).alias("__cut"),
+            F.max_by(F.when(nc, row), F.when(nc, F.col(MOR_SEQ))).alias("__nc"),
+            F.collect_list(F.when(~dele & co, row)).alias("__cos"),
         )
-        w = F.max_by(
-            F.struct(*service, *[F.col(c) for c in payload]), eff_seq
-        ).alias("__w")
+        cut = F.coalesce(F.col("__cut"), F.lit(-(1 << 63)))
+        nc_wins = F.coalesce(F.col(f"__nc.{MOR_SEQ}") > cut, F.lit(False))
+        first_co = F.aggregate(
+            "__cos", F.lit(None).cast(row_t),
+            lambda acc, x: F.when(
+                (x[MOR_SEQ] > cut) & (acc.isNull() | (x[MOR_SEQ] < acc[MOR_SEQ])), x
+            ).otherwise(acc),
+        )
         out_extra = (
             [
                 F.col(f"__w.{MOR_SEQ}").alias(MOR_SEQ),
                 F.lit(False).alias(MOR_DEL),
-                F.col(f"__w.{MOR_CO}").alias(MOR_CO),
+                (~F.col("__nc_wins")).alias(MOR_CO),
             ]
             if keep_service
             else []
         )
         return (
-            live.groupBy(*keys)
-            .agg(w)
+            agg.select(
+                *keys, nc_wins.alias("__nc_wins"),
+                F.when(nc_wins, F.col("__nc")).otherwise(first_co).alias("__w"),
+            )
+            .where(F.col("__w").isNotNull())
             .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload], *out_extra)
         )
 
@@ -583,24 +671,18 @@ class SnapshotTable:
         # hash-bucket pruning for point lookups: an equality predicate on
         # EVERY key column pins the row to one bucket — (B-1)/B of the files
         # drop before stats are even consulted (safe in both modes: a bucket
-        # owns all versions of its keys)
+        # owns all versions of its keys). The bucket is hashed on the driver
+        # against the TABLE's key types: xxhash64 is type-sensitive, so an
+        # implicitly-coerced literal (int vs string key) fails loudly here
+        # rather than hash to — and prune to — the wrong bucket. Key types
+        # the driver hash does not cover skip bucket pruning.
         eq = {c: v for c, op, v in preds if op == "="}
         buckets = None
         if all(k in eq for k in snap.key_cols):
-            # probe row pinned to the TABLE's key schema: xxhash64 is
-            # type-sensitive, so an implicitly-coerced literal (int vs
-            # string key) must fail loudly here rather than hash to — and
-            # prune to — the wrong bucket
-            kschema = T.StructType([
-                next(f for f in snap.schema().fields if f.name == k)
-                for k in snap.key_cols
-            ])
-            row = self.spark.createDataFrame(
-                [tuple(eq[k] for k in snap.key_cols)], kschema)
-            buckets = [
-                r[0] for r in row.select(
-                    _bucket_expr(snap.key_cols, snap.n_buckets)).collect()
-            ]
+            types = {f.name: f.dataType for f in snap.schema().fields}
+            b = _driver_bucket([eq[k] for k in snap.key_cols],
+                               [types[k] for k in snap.key_cols], snap.n_buckets)
+            buckets = None if b is None else [b]
         files_total = len(self._all_files(snap))
         files = self._all_files(snap, buckets)
         kept = [

@@ -335,13 +335,18 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
 
     approx = ivf_topk(emb, queries, k=5, n_centroids=8, iters=2, nprobe=3)
-    got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
+    pairs = [(r["query_id"], r["neighbor_id"]) for r in approx.collect()]
+    # one cell per corpus row, distinct probe cells per query: no pair twice
+    assert len(pairs) == len(set(pairs))
+    got = set(pairs)
     recall = len(got & truth) / len(truth)
     assert recall >= 0.5, f"recall {recall} too low for nprobe=3/8 cells"
 
     # probing every cell makes IVF exact (same candidates as brute force)
     full = ivf_topk(emb, queries, k=5, n_centroids=8, iters=2, nprobe=8)
-    got_full = {(r["query_id"], r["neighbor_id"]) for r in full.collect()}
+    pairs_full = [(r["query_id"], r["neighbor_id"]) for r in full.collect()]
+    assert len(pairs_full) == len(set(pairs_full))
+    got_full = set(pairs_full)
     assert got_full == truth
 
 

@@ -367,3 +367,165 @@ def test_expire_snapshots_reclaims_dead_files(spark, warehouse):
                for r, _, fs in os.walk(t.data_dir) for f in fs}
     assert on_disk == referenced
     assert n_files() < files_before
+
+
+MAP_SCHEMA = T.StructType(
+    SCHEMA.fields
+    + [T.StructField("attrs", T.MapType(T.StringType(), T.StringType()))]
+)
+OPS_SCHEMA = T.StructType(
+    MAP_SCHEMA.fields
+    + [T.StructField("d", T.BooleanType()), T.StructField("co", T.BooleanType())]
+)
+
+
+def test_mor_resolve_hand_computed_winners(spark, warehouse):
+    """The one-pass MoR resolve against hand-computed winners for every
+    delete / create-only interleaving, through every read path, across
+    compaction. ``op`` is N (normal), C (create-only) or D (delete); each
+    epoch's merge stamps ``__seq`` = epoch + 1."""
+    lake = SnapshotLake(spark, warehouse)
+    t = lake.create_table("w", MAP_SCHEMA, ["key"], n_buckets=4, mode="mor")
+
+    def merge(epoch, ops):
+        t.merge_upsert(spark.createDataFrame(
+            [(k, name, epoch, {"by": name}, op == "D", op == "C")
+             for k, op, name in ops], OPS_SCHEMA), epoch,
+            delete_col="d", create_only_col="co")
+
+    merge(0, [("co_only", "C", "c0"), ("two_co", "C", "first"),
+              ("co_after_del", "N", "n0"), ("del_after_co", "C", "c0"),
+              ("del_only", "D", None), ("nc_after_co", "C", "c0"),
+              ("co_after_nc", "N", "n0")])
+    merge(1, [("two_co", "C", "second"), ("co_after_del", "D", None),
+              ("del_after_co", "D", None), ("nc_after_co", "N", "n1"),
+              ("co_after_nc", "C", "c1")])
+    v1 = t.current().version
+    merge(2, [("co_after_del", "C", "c2")])
+
+    def state(df):
+        return {r["key"]: (r["name"], r["v"], r["attrs"]) for r in df.collect()}
+
+    def want(names):
+        return {k: (n, e, {"by": n}) for k, (n, e) in names.items()}
+
+    at_v1 = want({"co_only": ("c0", 0), "two_co": ("first", 0),
+                  "nc_after_co": ("n1", 1), "co_after_nc": ("n0", 0)})
+    final = {**at_v1, **want({"co_after_del": ("c2", 2)})}
+    all_keys = sorted(final) + ["del_after_co", "del_only", "absent"]
+
+    def check(expected, point_reads):
+        assert state(t.read()) == expected
+        if point_reads:  # one bucket-pinned lookup per key
+            for k in all_keys:
+                assert state(t.read_where([("key", "=", k)])) == (
+                    {k: expected[k]} if k in expected else {}), k
+        else:
+            assert state(t.read_where([("key", "in", all_keys)])) == expected
+        probe = spark.createDataFrame([(k,) for k in all_keys], "key string")
+        assert state(t.read_for_keys(probe)) == expected
+
+    check(final, point_reads=True)
+    assert state(t.read(version=v1)) == at_v1
+
+    assert t.compact()["compacted_buckets"] > 0
+    snap = t.current()
+    assert snap.files and not snap.delta_files
+    check(final, point_reads=False)
+    # compaction kept each winner's merge order: (__seq, __co) per key
+    base = t._read_files(t._all_files(snap), t._mor_schema(snap.schema()))
+    assert {r["key"]: (r["__seq"], r["__mor_create_only"], r["__mor_deleted"])
+            for r in base.collect()} == {
+        "co_only": (1, True, False), "two_co": (1, True, False),
+        "co_after_del": (3, True, False), "nc_after_co": (2, False, False),
+        "co_after_nc": (1, False, False)}
+    # so a later create-only write still loses to the compacted rows, and a
+    # later normal write still beats a compacted create-only row
+    merge(3, [("nc_after_co", "C", "late"), ("two_co", "C", "third"),
+              ("co_only", "N", "n3")])
+    assert state(t.read()) == {**final, **want({"co_only": ("n3", 3)})}
+
+
+def test_driver_bucket_matches_spark_xxhash64(spark, warehouse):
+    """The driver-side bucket hash equals ``pmod(xxhash64(keys), n)`` for
+    every engine key schema — nulls, empty and non-ASCII strings, lengths
+    across the 4/8/32-byte lanes, extreme longs — in one Spark collect; a
+    type-mismatched literal raises; a full-key point lookup plans with no
+    Spark job."""
+    import random
+
+    from amundsendatabuilder_spark.plans.lake import _driver_bucket
+    from amundsendatabuilder_spark.streaming.pipeline import (
+        DOC_KEYS, ENTITY_KEYS, NODE_KEYS, REL_KEYS)
+
+    # key schemas of every engine table, plus an int key
+    key_schemas = {
+        "entity": [(c, T.StringType()) for c in ENTITY_KEYS],
+        "node": [(c, T.StringType()) for c in NODE_KEYS],
+        "rel": [(c, T.StringType()) for c in REL_KEYS],
+        "doc": [(c, T.StringType()) for c in DOC_KEYS],
+        "user_sessions": [("user_id", T.LongType()), ("session_seq", T.LongType())],
+        "session_state": [("user_id", T.LongType())],
+        "int": [("i", T.IntegerType())],
+    }
+
+    rng = random.Random(11)
+    alphabet = "ab/_.Z09 éß中😀"
+    lengths = [0, 1, 3, 4, 5, 7, 8, 9, 12, 15, 16, 17, 31, 32, 33, 40, 63, 64, 65, 70]
+
+    def val(dt):
+        if rng.random() < 0.1:
+            return None
+        if isinstance(dt, T.StringType):
+            return "".join(rng.choice(alphabet) for _ in range(rng.choice(lengths)))
+        bits = 63 if isinstance(dt, T.LongType) else 31
+        return rng.choice([0, -1, 1, (1 << bits) - 1, -(1 << bits),
+                           rng.randrange(-(1 << bits), 1 << bits)])
+
+    cols = [(f"{s}__{c}", dt) for s, kc in key_schemas.items() for c, dt in kc]
+    data = [tuple(val(dt) for _, dt in cols) for _ in range(400)]
+    df = spark.createDataFrame(
+        data, T.StructType([T.StructField(c, dt) for c, dt in cols]))
+    ns = (1, 4, 64, 4096)
+    exprs = [
+        F.pmod(F.xxhash64(*[F.col(f"{s}__{c}") for c, _ in kc]), F.lit(n))
+        .alias(f"{s}/{n}")
+        for s, kc in key_schemas.items() for n in ns
+    ]
+    got = df.select(*[c for c, _ in cols], *exprs).collect()
+    mismatches = [
+        (s, n, [r[f"{s}__{c}"] for c, _ in kc])
+        for r in got for s, kc in key_schemas.items() for n in ns
+        if _driver_bucket([r[f"{s}__{c}"] for c, _ in kc],
+                          [dt for _, dt in kc], n) != r[f"{s}/{n}"]
+    ]
+    assert not mismatches, mismatches[:5]
+
+    # a literal of the wrong Python type never hashes into some bucket
+    for v, dt in [(1, T.StringType()), ("1", T.LongType()),
+                  (True, T.LongType()), (1 << 31, T.IntegerType()), (1.0, T.LongType())]:
+        with pytest.raises(TypeError, match="does not match"):
+            _driver_bucket([v], [dt], 64)
+    # uncovered key types skip bucket pruning instead of guessing
+    assert _driver_bucket([1.5], [T.DoubleType()], 64) is None
+    assert _driver_bucket(["a"], [T.StringType("UTF8_LCASE")], 64) is None
+
+    lake, t = _mk(spark, warehouse, n_buckets=4)
+    t.merge_upsert(spark.createDataFrame(
+        [(f"k{i}", "x", i) for i in range(8)], SCHEMA), 0)
+    with pytest.raises(TypeError, match="does not match"):
+        t.plan_scan([("key", "=", 3)])
+    sc = spark.sparkContext
+    sc.setJobGroup("plan_scan_jobs", "plan_scan starts no Spark job")
+    try:
+        plan = t.plan_scan([("key", "=", "k3")])
+        planned = sc.statusTracker().getJobIdsForGroup("plan_scan_jobs")
+        rows_k3 = t.read_where([("key", "=", "k3")]).collect()
+        read_jobs = sc.statusTracker().getJobIdsForGroup("plan_scan_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert planned == [] and read_jobs  # the group does see the read's jobs
+    assert len(plan["files"]) == len(t._all_files(
+        t.current(), [_driver_bucket(["k3"], [T.StringType()], 4)]))
+    assert [(r["key"], r["v"]) for r in rows_k3] == [("k3", 3)]
