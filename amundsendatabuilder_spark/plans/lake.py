@@ -22,14 +22,17 @@ semantics mirror Iceberg v2 copy-on-write MERGE):
   design point with B=4096, a batch touching 1% of keys reads+rewrites ~1% of
   the table; the join shuffles only (touched data + batch), the small batch
   side broadcasts under AQE, and skewed buckets split via AQE skew-join.
-* **merge-on-read** (``mode="mor"``): a merge only appends one delta file
-  per touched bucket; every row carries ``__seq`` (the merge counter),
-  ``__mor_deleted`` and ``__mor_create_only``. Reads resolve each key in ONE
-  ``groupBy(keys)`` pass (latest delete cut, latest normal row, create-only
-  rows; see ``_resolve``), and ``compact()`` folds deltas back into base
-  files whose rows keep the winners' ``__seq``/``__mor_create_only``. A
-  point lookup pins its bucket with a driver-side XXH64 equal to Spark's,
-  so scan planning runs no Spark job.
+* **merge-on-read** (``mode="mor"``): a merge only appends ONE sorted run
+  (rows ordered by ``__bucket`` then key, usually one file; the LSM-tree
+  flush) whatever the number of buckets it touches; every row carries
+  ``__seq`` (the merge counter), ``__mor_deleted``, ``__mor_create_only``
+  and its stored ``__bucket``, whose footer bounds let bucket-restricted
+  readers skip runs. Reads resolve each key in ONE ``groupBy(keys)`` pass
+  (latest delete cut, latest normal row, create-only rows; see
+  ``_resolve``), and ``compact()`` folds every run back into the
+  bucket-partitioned base, whose rows keep the winners'
+  ``__seq``/``__mor_create_only``. A point lookup pins its bucket with a
+  driver-side XXH64 equal to Spark's, so scan planning runs no Spark job.
 * **schema evolution**: additive only — new batch columns are appended to the
   table schema; old files are read through the evolved schema (missing →
   null), mirroring Iceberg's safe additive evolution and the reference's
@@ -179,6 +182,10 @@ class Snapshot:
     parent: int | None = None
     committed_at_ms: int = 0
     mode: str = "cow"                    # cow | mor
+    # mor: one entry per merge since the last fold, str(seq) -> the files of
+    # that merge's sorted run. Readers treat EVERY entry as a run whatever
+    # its key, so manifests that keyed per-bucket delta files by bucket
+    # still read (their files carry no __bucket bounds, so never prune)
     delta_files: dict[str, list[str]] = field(default_factory=dict)
     seq: int = 0                         # monotonic merge counter (mor order)
     # file -> {col: [lower_bound, upper_bound]} from parquet footers; string
@@ -451,20 +458,41 @@ class SnapshotTable:
             .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload], *out_extra)
         )
 
+    @staticmethod
+    def _runs(snap: Snapshot) -> list[str]:
+        """Every MoR run file of ``snap``, whatever its manifest key."""
+        return [f for fl in snap.delta_files.values() for f in fl]
+
     def _all_files(self, snap: Snapshot, buckets: list[int] | None = None) -> list[str]:
-        srcs = [snap.files, snap.delta_files] if snap.mode == "mor" else [snap.files]
+        """Base files of ``buckets`` (all when None) plus, in MoR, every run
+        whose ``__bucket`` bounds may hold one of them (a run without bounds
+        is kept). A kept run also holds rows of other buckets."""
         if buckets is None:
-            return [f for src in srcs for fl in src.values() for f in fl]
-        return [f for src in srcs for b in buckets for f in src.get(str(b), [])]
+            base = [f for fl in snap.files.values() for f in fl]
+        else:
+            base = [f for b in buckets for f in snap.files.get(str(b), [])]
+        if snap.mode != "mor":
+            return base
+        runs = self._runs(snap)
+        if buckets is not None:
+            runs = [f for f in runs if self._may_match(
+                snap.file_stats.get(f, {}).get("__bucket"), "in", buckets)]
+        return base + runs
 
     def _read_snapshot(self, snap: Snapshot,
                        buckets: list[int] | None = None) -> DataFrame:
         """Resolved (LWW for MoR, plain for CoW) content of one snapshot,
-        optionally restricted to a bucket subset (manifest pruning)."""
+        optionally restricted to a bucket subset (manifest pruning). A MoR
+        run spans buckets, so its rows of other buckets drop before the
+        resolve; the bucket is hashed from the keys, not read from the
+        stored column, so files written without one filter the same."""
         if snap.mode == "mor":
             raw = self._read_files(
                 self._all_files(snap, buckets), self._mor_schema(snap.schema())
             )
+            if buckets is not None:
+                raw = raw.where(_bucket_expr(snap.key_cols, snap.n_buckets)
+                                .isin(list(buckets)))
             return self._resolve(raw, snap.schema(), snap.key_cols)
         return self._read_files(self._all_files(snap, buckets), snap.schema())
 
@@ -549,12 +577,14 @@ class SnapshotTable:
         consumers (search-doc rebuilds, replication) process O(changed keys),
         not O(table).
 
-        Scale shape: only buckets whose manifest file lists differ between
-        the two snapshots are read at all — at the 100 TB design point a
-        window touching 1% of buckets scans ~1% of the table twice; the diff
-        is one null-safe full-outer join on the key (both sides share the
-        bucket partitioning) and payload equality runs JVM-side on
-        map-canonicalized structs. Payload-identical rewrites (compaction,
+        Scale shape: only buckets whose base file lists differ between
+        the two snapshots, or that a run present in only one of them may
+        hold (its ``__bucket`` bounds), are read at all — at the 100 TB
+        design point a window touching 1% of buckets scans ~1% of the
+        table twice; the diff is one null-safe full-outer join on the key
+        (both sides share the bucket partitioning) and payload equality
+        runs JVM-side on map-canonicalized structs. Payload-identical
+        rewrites (compaction,
         idempotent re-upserts) emit nothing — the feed is logical, not
         physical."""
         a = self.snapshot_at(from_version)
@@ -569,17 +599,25 @@ class SnapshotTable:
         keys = b.key_cols
         schema = b.schema()  # additive evolution: superset of a's
         payload = [f for f in schema.fields if f.name not in keys]
-        touched = [
-            bk for bk in
-            set(a.files) | set(b.files) | set(a.delta_files) | set(b.delta_files)
+        touched = {
+            int(bk) for bk in set(a.files) | set(b.files)
             if a.files.get(bk, []) != b.files.get(bk, [])
-            or a.delta_files.get(bk, []) != b.delta_files.get(bk, [])
+        }
+        # a run in only one snapshot touches its __bucket range; a run
+        # without bounds touches every bucket
+        runs_a = set(self._runs(a))
+        ranges = [
+            (a if f in runs_a else b).file_stats.get(f, {}).get("__bucket")
+            for f in runs_a ^ set(self._runs(b))
         ]
-        if not touched:
-            return self.spark.createDataFrame(
-                [], T.StructType(schema.fields
-                                 + [T.StructField("_change_type", T.StringType())]))
-        bks = [int(x) for x in touched]
+        bks = None
+        if None not in ranges:
+            touched |= {bk for lo, hi in ranges for bk in range(lo, hi + 1)}
+            if not touched:
+                return self.spark.createDataFrame(
+                    [], T.StructType(schema.fields
+                                     + [T.StructField("_change_type", T.StringType())]))
+            bks = sorted(touched)
         old = self._read_snapshot(a, bks)
         # align the old side to the evolved schema (missing columns → null,
         # same as reading old files through the new schema)
@@ -1061,14 +1099,14 @@ class SnapshotTable:
         }
 
     def _append_mor(self, batch, snap, new_schema, epoch_id, tag, now_ms):
-        """Merge-on-read write path: ONE shuffle (repartition by bucket), no
+        """Merge-on-read write path: ONE shuffle into ONE key-sorted run, no
         read of existing data, no rewrite — per-epoch cost is O(batch), not
-        O(touched table data). Readers resolve winners by ``__seq``;
-        ``compact()`` folds deltas into the base asynchronously. This is the
-        10^10-event ingest shape (Iceberg v2 MoR / Hudi MOR equivalent).
-        Returns the new delta map, the merge seq and the lineage counts;
-        ``buckets_touched`` comes from the written layout (nothing is read,
-        so no touched-bucket job runs)."""
+        O(touched table data), and the file count does not grow with the
+        buckets touched. Readers resolve winners by ``__seq``; ``compact()``
+        folds runs into the base asynchronously. This is the 10^10-event
+        ingest shape (Iceberg v2 MoR / Hudi MOR equivalent). Returns the new
+        run map (one ``str(seq)`` entry more; none for an empty batch), the
+        merge seq and the lineage counts."""
         s_cols = set(batch.columns)
         seq = snap.seq + 1
         out = batch.select(
@@ -1091,10 +1129,7 @@ class SnapshotTable:
             F.count(F.lit(1)).alias("rows_seen"),
             F.sum(F.col(MOR_DEL).cast("long")).alias("rows_delete_markers"),
         )
-        new_files = self._write_buckets(out, snap, f"d{epoch_id}_")
-        deltas = {b: list(fl) for b, fl in snap.delta_files.items()}
-        for b, fl in new_files.items():
-            deltas.setdefault(b, []).extend(fl)
+        run = self._write_run(out, snap.key_cols, f"d{epoch_id}_")
         try:
             m = obs.get
         except Exception:
@@ -1104,23 +1139,42 @@ class SnapshotTable:
                 F.sum(F.col("__del").cast("long")).alias("rows_delete_markers"),
             ).first()
             m = {k: int(row[k] or 0) for k in ("rows_seen", "rows_delete_markers")}
+        if not m.get("rows_seen"):  # an empty write's schema-only file joins no run
+            run = []
+        deltas = dict(snap.delta_files)
+        if run:
+            deltas[str(seq)] = run
         return deltas, seq, {
             "rows_seen": m.get("rows_seen", 0),
             "rows_delete_markers": m.get("rows_delete_markers") or 0,
-            "buckets_touched": len(new_files),
+            "run_files": len(run),
             "mode": "mor",
             "seq": seq,
         }
+
+    def _write_run(self, df: DataFrame, keys: list[str], prefix: str) -> list[str]:
+        """Write ``df`` (carrying ``__bucket``) as ONE run under
+        ``data/{prefix}{uuid}``, rows sorted by ``__bucket`` then key, and
+        return its files. The repartition has no count, so AQE sizes it to
+        the data: one task and one file for an epoch-sized batch, more for a
+        large one. ``__bucket`` stays a stored column, so each file's footer
+        bounds say which buckets it may hold."""
+        out_dir = os.path.join(self.data_dir, f"{prefix}{uuid.uuid4().hex[:8]}")
+        (df.repartition("__bucket").sortWithinPartitions("__bucket", *keys)
+         .write.mode("overwrite").parquet(out_dir))
+        return sorted(os.path.join(out_dir, f) for f in os.listdir(out_dir)
+                      if f.endswith(".parquet"))
 
     def _write_buckets(self, df: DataFrame, snap: Snapshot, prefix: str,
                        sort_keys: tuple[str, ...] | list[str] = (),
                        max_rows: int = 0) -> dict[str, list[str]]:
         """Write ``df`` (carrying ``__bucket``) as a fresh bucket-partitioned
         directory under ``data/{prefix}{uuid}`` and return its bucket →
-        files map — the one writer behind every merge, append, compaction,
-        rewrite and delete. ``sort_keys`` key-sorts rows within each bucket;
-        ``max_rows`` > 0 caps rows per file (a large bucket splits into
-        files covering disjoint key ranges).
+        files map — the one writer behind every base write: CoW merge, fold
+        (compaction, MoR delete), rewrite and CoW delete; MoR appends write
+        runs (``_write_run``). ``sort_keys`` key-sorts rows within each
+        bucket; ``max_rows`` > 0 caps rows per file (a large bucket splits
+        into files covering disjoint key ranges).
 
         Fan-out: ``min(n_buckets, 2 × engine_parallelism)`` tasks. The
         explicit count matters: without it AQE coalesces the exchange toward
@@ -1152,32 +1206,48 @@ class SnapshotTable:
 
     def compact(self, max_delta_files: int = 0,
                 target_file_rows: int = 4_000_000) -> dict[str, Any]:
-        """Fold MoR deltas into the base: resolve winners for every bucket
-        whose delta count exceeds ``max_delta_files`` and rewrite those
-        buckets as base files (winner rows keep their ``__seq``). The
+        """Fold every MoR run into the base once the table holds more than
+        ``max_delta_files`` runs (see ``_fold``): winner rows keep their
+        ``__seq``; the runs' buckets are rewritten, the rest carry over. The
         amortized half of the append-only write path.
 
         Rewritten buckets come out CLUSTERED: rows are key-sorted within
         each bucket and files are capped at ``target_file_rows`` rows (0
         disables the cap), so a large bucket splits into files covering
         disjoint key ranges. The manifest's per-file bounds then let
-        ``read_for_keys`` / ``read_where`` prune WITHIN a bucket, and parquet row-group
-        stats become monotone for pushed key predicates — the Hudi/
-        Iceberg "write fast, cluster on compaction" layout. The sort is
-        deliberately NOT on the hot MoR append path (it would tax every
-        ingest epoch); it rides the shuffle compaction already pays."""
+        ``read_for_keys`` / ``read_where`` prune WITHIN a bucket, and
+        parquet row-group stats become monotone for pushed key predicates —
+        the Hudi/Iceberg "write fast, cluster on compaction" layout."""
         snap = self.current()
-        if snap.mode != "mor":
+        if snap.mode != "mor" or len(snap.delta_files) <= max_delta_files:
             return {"compacted_buckets": 0}
-        todo = [
-            b for b in set(snap.files) | set(snap.delta_files)
-            if len(snap.delta_files.get(b, [])) > max_delta_files
-        ]
-        if not todo:
-            return {"compacted_buckets": 0}
-        mor_schema = self._mor_schema(snap.schema())
-        files = [f for b in todo for f in
-                 snap.files.get(b, []) + snap.delta_files.get(b, [])]
+        return self._fold(snap, [], max_rows=target_file_rows)
+
+    def _fold(self, snap: Snapshot, buckets: list[int], drop=None,
+              max_rows: int = 0,
+              metrics: dict[str, Any] | None = None) -> dict[str, Any]:
+        """Fold ALL runs of a MoR snapshot, plus the base of ``buckets``,
+        into fresh base files and commit with no runs left (a run spans
+        buckets, so it cannot be half-folded). Reads the base of
+        ``buckets`` ∪ the runs' buckets (one column-pruned job finds those)
+        and every run, resolves keeping each winner's ``__seq``/``__co``,
+        drops rows matching ``drop`` (a null ``drop`` keeps the row) and
+        writes them key-sorted with ``_write_buckets`` (``max_rows`` per
+        file, 0 = no cap). Deleted keys vanish
+        entirely: every row at or before their delete cut is folded away
+        too, so nothing can resurrect. Returns the committed metrics
+        (``metrics`` plus the fold's own counts)."""
+        keys = snap.key_cols
+        schema = snap.schema()
+        mor_schema = self._mor_schema(schema)
+        bexpr = _bucket_expr(keys, snap.n_buckets)
+        runs = self._runs(snap)
+        todo = set(buckets)
+        if runs:
+            key_schema = T.StructType([schema[k] for k in keys])
+            todo |= {r[0] for r in self._read_files(runs, key_schema)
+                     .select(bexpr).distinct().collect()}
+        files = [f for b in sorted(todo) for f in snap.files.get(str(b), [])] + runs
         # driver-side stat of the inputs being folded (bounded metadata
         # traffic): lets replay artifacts separate compaction-epoch cost
         # from host noise (BENCH_ENDURANCE per-epoch bytes/files)
@@ -1187,28 +1257,20 @@ class SnapshotTable:
                 in_bytes += os.path.getsize(f)
             except OSError:
                 pass
-        raw = self._read_files(files, mor_schema)
-        keys = snap.key_cols
-        # resolve but KEEP rows' seq/co (merge order survives the rewrite);
-        # deleted keys drop entirely — safe because compaction also removes
-        # every row at-or-before the delete cut, so nothing can resurrect
-        resolved = self._resolve(raw, snap.schema(), keys, keep_service=True).withColumn(
-            "__bucket", _bucket_expr(keys, snap.n_buckets)
-        )
-        new_base = self._write_buckets(resolved, snap, "c", sort_keys=keys,
-                                       max_rows=target_file_rows)
-        base = dict(snap.files)
-        deltas = dict(snap.delta_files)
-        for b in todo:
-            base.pop(b, None)
-            deltas.pop(b, None)
+        kept = self._resolve(self._read_files(files, mor_schema), schema, keys,
+                             keep_service=True)
+        if drop is not None:
+            kept = kept.where(~F.coalesce(drop, F.lit(False)))
+        new_base = self._write_buckets(kept.withColumn("__bucket", bexpr), snap,
+                                       "c", sort_keys=keys, max_rows=max_rows)
+        base = {b: fl for b, fl in snap.files.items() if int(b) not in todo}
         base.update(new_base)
-        metrics = {"compacted_buckets": len(todo),
+        metrics = {**(metrics or {}),
+                   "compacted_buckets": len(todo),
                    "compacted_files": len(files),
                    "compacted_bytes": in_bytes,
                    "output_files": sum(len(fl) for fl in new_base.values())}
-        self._commit(self._next(snap, files=base, delta_files=deltas,
-                                metrics=metrics))
+        self._commit(self._next(snap, files=base, delta_files={}, metrics=metrics))
         return metrics
 
     def expire_snapshots(
@@ -1356,7 +1418,9 @@ class SnapshotTable:
         """Set-based DELETE with the reference's staleness safety guard:
         abort when the stale share (overall, or within any ``guard_group_col``
         group) reaches ``max_delete_pct`` (reference default 5%,
-        ``neo4j_staleness_removal_task.py:187-253``)."""
+        ``neo4j_staleness_removal_task.py:187-253``). CoW rewrites the
+        touched buckets; MoR folds them together with every run
+        (``_fold``)."""
         snap = self.current()
         schema = snap.schema()
         full = self.read()  # mode-aware (MoR reads resolve winners)
@@ -1392,38 +1456,26 @@ class SnapshotTable:
         if not touched:
             return {"rows_deleted": 0, "buckets_touched": 0}
 
-        if snap.mode == "mor":
-            # resolve touched buckets (keeping seq/co), drop matches, rewrite
-            # those buckets as base and clear their deltas
-            raw = self._read_files(
-                self._all_files(snap, touched), self._mor_schema(schema)
-            )
-            kept = (
-                self._resolve(raw, schema, snap.key_cols, keep_service=True)
-                .where(~F.coalesce(cond, F.lit(False)))  # null cond ⇒ keep
-                .withColumn("__bucket", bexpr)
-            )
-        else:
-            files = [f for b in touched for f in snap.files.get(str(b), [])]
-            kept = (
-                self._read_files(files, schema)
-                .where(~F.coalesce(cond, F.lit(False)))  # null cond ⇒ keep
-                .withColumn("__bucket", bexpr)
-            )
-        new_files = self._write_buckets(kept, snap, "del_")
-        nf = dict(snap.files)
-        deltas = dict(snap.delta_files)
-        for b in touched:
-            nf.pop(str(b), None)
-            deltas.pop(str(b), None)
-        nf.update(new_files)
         metrics = {
             "rows_deleted": rows_deleted,
             "buckets_touched": len(touched),
             "deleted_per_bucket": {str(r["b"]): r["n"] for r in per_bucket},
         }
-        self._commit(self._next(snap, files=nf, delta_files=deltas,
-                                metrics=metrics))
+        if snap.mode == "mor":
+            self._fold(snap, touched, drop=cond, metrics=metrics)
+            return metrics
+        files = [f for b in touched for f in snap.files.get(str(b), [])]
+        kept = (
+            self._read_files(files, schema)
+            .where(~F.coalesce(cond, F.lit(False)))  # null cond ⇒ keep
+            .withColumn("__bucket", bexpr)
+        )
+        new_files = self._write_buckets(kept, snap, "del_")
+        nf = dict(snap.files)
+        for b in touched:
+            nf.pop(str(b), None)
+        nf.update(new_files)
+        self._commit(self._next(snap, files=nf, metrics=metrics))
         return metrics
 
 

@@ -167,9 +167,11 @@ class CDCPipeline:
         materialize: str = "local_checkpoint",
     ):
         """``table_mode``: "cow" rewrites touched buckets per epoch (cheap
-        reads); "mor" appends per epoch and resolves winners on read — the
-        ingest-throughput shape for 10^10-event replays, with
-        ``compact_every`` epochs folding deltas back into the base."""
+        reads); "mor" appends one sorted run per table per epoch and
+        resolves winners on read — the ingest-throughput shape for
+        10^10-event replays. Every ``compact_every`` epochs, each MoR table
+        holding more than ``compact_max_delta_files`` runs folds them all
+        back into the base."""
         self.spark = spark
         self.cluster = cluster
         self.create_only_labels = create_only_labels
@@ -260,9 +262,10 @@ class CDCPipeline:
 
 
     def _maybe_compact(self, epoch_id: int) -> dict[str, Any] | None:
-        """Fold MoR deltas into the base every ``compact_every`` epochs.
+        """Fold MoR runs into the base every ``compact_every`` epochs, in
+        each table holding more than ``compact_max_delta_files`` runs.
         ALL MoR tables compact here — including ``table_usage``, whose
-        deltas would otherwise accumulate forever (its reads would slow
+        runs would otherwise accumulate forever (its reads would slow
         linearly with epochs ingested).  Runs on the replayed form of a
         boundary epoch too (the crash may have landed between the epoch
         marker commit and compaction).  Returns summed bytes/files/buckets

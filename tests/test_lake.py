@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from amundsendatabuilder_spark.plans.lake import SnapshotLake
+from amundsendatabuilder_spark.plans.lake import ManifestIO, SnapshotLake, SnapshotTable
 
 SCHEMA = T.StructType(
     [
@@ -529,3 +529,179 @@ def test_driver_bucket_matches_spark_xxhash64(spark, warehouse):
     assert len(plan["files"]) == len(t._all_files(
         t.current(), [_driver_bucket(["k3"], [T.StringType()], 4)]))
     assert [(r["key"], r["v"]) for r in rows_k3] == [("k3", 3)]
+
+
+def test_mor_sorted_runs_and_run_aware_readers(spark, warehouse):
+    """A MoR merge writes ONE key-sorted run whatever buckets it touches;
+    bucket-restricted readers skip runs by their ``__bucket`` bounds and
+    drop a kept run's rows of other buckets; the change feed, compaction
+    and delete_where fold runs exactly. Buckets are hand-computed for
+    n_buckets=8."""
+    from amundsendatabuilder_spark.plans.lake import _driver_bucket
+
+    bucket = {"b": 3, "c": 2, "j": 5, "i": 1, "e": 7, "a": 4, "u": 0}
+    assert {k: _driver_bucket([k], [T.StringType()], 8) for k in bucket} == bucket
+    lake = SnapshotLake(spark, warehouse)
+    t = lake.create_table("r", SCHEMA, ["key"], n_buckets=8, mode="mor")
+
+    def merge(epoch, recs):
+        t.merge_upsert(spark.createDataFrame(
+            [(k, n, v, d) for k, n, v, d in recs],
+            T.StructType(SCHEMA.fields + [T.StructField("dl", T.BooleanType())])),
+            epoch, delete_col="dl")
+
+    def state(df):
+        return {r["key"]: (r["name"], r["v"]) for r in df.collect()}
+
+    merge(0, [("b", "B", 1, False), ("c", "C", 1, False), ("j", "J", 1, False)])
+    v1 = t.current()
+    assert list(v1.delta_files) == ["1"] and len(v1.delta_files["1"]) == 1
+    run1 = v1.delta_files["1"][0]
+    assert v1.file_stats[run1]["__bucket"] == [2, 5]
+    assert t.current().metrics["run_files"] == 1
+    # runs prune by bucket range: buckets 0, 1, 6, 7 lie outside [2, 5]
+    assert t._all_files(v1, [7]) == [] and t._all_files(v1, [0, 1, 6]) == []
+    assert t._all_files(v1, [4]) == [run1]    # in range, though empty
+    # a bucket-restricted resolve keeps only that bucket's keys
+    assert state(t._read_snapshot(v1, [3])) == {"b": ("B", 1)}
+    assert state(t._read_snapshot(v1, [4])) == {}
+
+    # update c, delete j, insert i and e: one more run, bounds [1, 7]
+    merge(1, [("c", "C2", 2, False), ("j", None, None, True),
+              ("i", "I", 2, False), ("e", "E", 2, False)])
+    v2 = t.current()
+    assert sorted(v2.delta_files) == ["1", "2"]
+    assert v2.file_stats[v2.delta_files["2"][0]]["__bucket"] == [1, 7]
+    assert t._all_files(v2, [0]) == []
+    feed = {r["key"]: (r["_change_type"], r["name"])
+            for r in t.changes(v1.version, v2.version).collect()}
+    # b (bucket 3, inside the new run's range, untouched) shows nothing
+    assert feed == {"c": ("update", "C2"), "j": ("delete", "J"),
+                    "i": ("insert", "I"), "e": ("insert", "E")}
+    want = {"b": ("B", 1), "c": ("C2", 2), "i": ("I", 2), "e": ("E", 2)}
+    assert state(t.read()) == want
+    # an empty batch adds no run
+    merge(2, [])
+    assert sorted(t.current().delta_files) == ["1", "2"]
+
+    m = t.compact()
+    snap = t.current()
+    assert snap.delta_files == {} and state(t.read()) == want
+    assert m["compacted_buckets"] == len({1, 2, 3, 5, 7})
+    assert sorted(snap.files) == ["1", "2", "3", "7"]   # j's bucket folded empty
+    assert t.changes(v2.version).count() == 0
+
+    merge(3, [("a", "A", 3, False), ("u", "U", 3, False), ("b", "B3", 3, False)])
+    m = t.delete_where(F.col("v") == 3, max_delete_pct=0.9)
+    assert m["rows_deleted"] == 3
+    snap = t.current()
+    assert snap.delta_files == {}
+    assert state(t.read()) == {"c": ("C2", 2), "i": ("I", 2), "e": ("E", 2)}
+
+
+def test_mor_bucket_keyed_delta_manifest_still_reads(spark, warehouse):
+    """A manifest whose ``delta_files`` is keyed by bucket (per-bucket delta
+    files with no stored ``__bucket``) reads, feeds changes and compacts to
+    the same state: its files are runs without bounds, never pruned."""
+    from amundsendatabuilder_spark.plans.lake import _bucket_expr
+
+    lake = SnapshotLake(spark, warehouse)
+    t = lake.create_table("old", SCHEMA, ["key"], n_buckets=4, mode="mor")
+    v0 = t.current()
+    svc = "__seq long, __mor_deleted boolean, __mor_create_only boolean"
+    deltas = t._write_buckets(spark.createDataFrame(
+        [("a", "A", 1, "epoch_0", 1, 1, False, False),
+         ("b", "B", 1, "epoch_0", 1, 1, False, False),
+         ("c", "C", 1, "epoch_0", 1, 1, False, False),
+         ("b", "B2", 2, "epoch_1", 2, 2, False, False),
+         ("c", None, None, "epoch_1", 2, 2, True, False)],
+        "key string, name string, v long, publish_tag string, "
+        f"updated_ms long, {svc}",
+    ).withColumn("__bucket", _bucket_expr(["key"], 4)), v0, "d0_")
+    assert set(deltas) == {"0", "2", "3"}       # a: 0, b: 3, c: 2
+    t._commit(t._next(v0, delta_files=deltas, seq=2, epochs={"default": 1}))
+    snap = t.current()
+    assert all("__bucket" not in snap.file_stats[f] for f in t._runs(snap))
+    assert t._all_files(snap, [1]) == t._runs(snap)
+    want = {"a": ("A", 1), "b": ("B2", 2)}
+    assert rows(t) == want
+    assert [r["key"] for r in t.read_where([("key", "=", "b")]).collect()] == ["b"]
+    assert {r["key"]: r["_change_type"] for r in t.changes(0).collect()} == {
+        "a": "insert", "b": "insert"}
+    assert t.compact()["compacted_buckets"] == 3
+    assert t.current().delta_files == {} and rows(t) == want
+    t.merge_upsert(spark.createDataFrame([("a", "A3", 3)], SCHEMA), 2)
+    assert rows(t) == {"a": ("A3", 3), "b": ("B2", 2)}
+
+
+class _Crash(Exception):
+    pass
+
+
+class FaultyManifestIO(ManifestIO):
+    """Manifest storage that raises on the k-th call of one primitive
+    (``create_exclusive``: the data is written, no manifest yet;
+    ``swap_pointer``: the manifest is created, CURRENT not yet swapped)."""
+
+    def __init__(self, op: str, k: int = 1):
+        self.op, self.k, self.calls = op, k, 0
+
+    def _tick(self, op: str) -> None:
+        if op == self.op:
+            self.calls += 1
+            if self.calls == self.k:
+                raise _Crash(f"{op} #{self.k}")
+
+    def create_exclusive(self, path: str, content: str) -> bool:
+        self._tick("create_exclusive")
+        return super().create_exclusive(path, content)
+
+    def swap_pointer(self, pointer_path: str, content: str) -> None:
+        self._tick("swap_pointer")
+        super().swap_pointer(pointer_path, content)
+
+
+def test_mor_crash_at_run_and_fold_commit_boundaries(spark, warehouse):
+    """Crash a run append, compaction and a MoR delete_where at their
+    commit boundaries; a fresh table on plain manifest storage re-runs the
+    operation (a merge skips through the ledger) and reaches the state,
+    epochs and run count of an uninterrupted run."""
+    import os
+
+    def merge(epoch, recs):
+        return lambda t: t.merge_upsert(spark.createDataFrame(recs, SCHEMA), epoch)
+
+    ops = [
+        merge(0, [("a", "A", 1), ("b", "B", 1), ("c", "C", 1)]),
+        merge(1, [("b", "B2", 2), ("d", "D", 2)]),
+        lambda t: t.compact(),
+        merge(2, [("a", "A3", 3), ("e", "E", 3)]),
+        lambda t: t.delete_where(F.col("v") == 3, max_delete_pct=0.9),
+    ]
+    # op index -> the crashes it suffers before a clean re-run: compaction
+    # first dies after its fold wrote data, then between create and swap
+    faults = {1: ["swap_pointer"], 2: ["create_exclusive", "swap_pointer"],
+              4: ["swap_pointer"]}
+
+    def observe(t):
+        snap = t.current()
+        return rows(t), snap.epochs, len(snap.delta_files)
+
+    def table(name):
+        return SnapshotLake(spark, os.path.join(warehouse, name)).create_table(
+            "t", SCHEMA, ["key"], n_buckets=4, mode="mor")
+
+    ref, t = table("ref"), table("crash")
+    for i, op in enumerate(ops):
+        op(ref)
+        for fault in faults.get(i, []):
+            with pytest.raises(_Crash):
+                op(SnapshotTable(spark, t.root, FaultyManifestIO(fault)))
+        t = SnapshotTable(spark, t.root, ManifestIO())
+        out = op(t)
+        if i == 1:
+            assert "skipped_epoch" in out
+        if i in faults:
+            assert observe(t) == observe(ref), (i, faults[i])
+    assert observe(t) == ({"b": ("B2", 2), "c": ("C", 1), "d": ("D", 2)},
+                          {"default": 2}, 0)
