@@ -299,8 +299,10 @@ def paragraph_blocks(df: DataFrame, id_col: str = "doc_id",
     pass viable over 100 TB (the only shuffles in the whole pipeline are the
     ones keyed by block content downstream).
 
-    Returns ``(id_col, block_idx BIGINT, block STRING)``; empty docs emit
-    nothing.
+    Returns ``(id_col, block_idx BIGINT, block STRING)``. A blank (empty or
+    whitespace-only) doc splits into one empty token, so it emits one empty
+    block ``''`` — and blank docs therefore count as duplicates of each
+    other in :func:`paragraph_dedup`; a null doc emits nothing.
     """
     words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     nblocks = F.ceil(F.size(words) / F.lit(block_words)).cast("int")

@@ -14,80 +14,31 @@ keys of the whole engine):
 * owner/user key = email                   — ``user.py:14-19``
 * tag key = lower-cased trimmed tag        — ``table_metadata.py:20-27``
 
-Each helper exists twice: a Column-expression form (JVM-side, codegen'd — use
-in pipelines) and a plain-string form (driver/tests). For the CDC engine over
-the repo table, db=``repofs``, cluster=config, schema=``repo``, table=``path``.
+The CDC epoch builds its per-row keys as SQL text (``*_sql``, over SQL
+expressions, spliced into ``selectExpr`` — the JVM parses it once); the
+plain-string forms (``*_str``) serve the driver, tests and fixtures, and the
+two agree. The catalog and dashboard models build the same grammar in their
+own modules. For the CDC engine over the repo table, db=``repofs``, cluster=config,
+schema=``repo``, table=``path``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from amundsendatabuilder_spark.functions.sqltext import sql_str
 
 DATABASE = "repofs"
 CLUSTER = "gold"
 
 
-def _c(x: Column | str) -> Column:
-    return x if isinstance(x, Column) else F.lit(x)
+# ---- SQL-text forms (over SQL expressions; agree with the _str forms) -----
+
+def schema_key_sql(schema: str, cluster: str = CLUSTER, db: str = DATABASE) -> str:
+    return f"concat({sql_str(cluster_key_str(cluster, db) + '.')}, {schema})"
 
 
-# ---- Column-expression forms (JVM-side) ------------------------------------
-
-def database_key(db: Column | str = DATABASE) -> Column:
-    return F.concat(F.lit("database://"), _c(db))
-
-
-def cluster_key(cluster: Column | str = CLUSTER, db: Column | str = DATABASE) -> Column:
-    return F.concat(_c(db), F.lit("://"), _c(cluster))
-
-
-def schema_key(schema: Column | str, cluster: Column | str = CLUSTER,
-               db: Column | str = DATABASE) -> Column:
-    return F.concat(cluster_key(cluster, db), F.lit("."), _c(schema))
-
-
-def table_key(schema: Column | str, table: Column | str,
-              cluster: Column | str = CLUSTER, db: Column | str = DATABASE) -> Column:
-    return F.concat(schema_key(schema, cluster, db), F.lit("/"), _c(table))
-
-
-def column_key(tbl_key: Column, column: Column | str) -> Column:
-    return F.concat(tbl_key, F.lit("/"), _c(column))
-
-
-def description_key(parent_key: Column, source: Column | str | None = None) -> Column:
-    """``{parent}/_description``; programmatic: ``{parent}/_{source}_description``."""
-    if source is None:
-        return F.concat(parent_key, F.lit("/_description"))
-    return F.concat(parent_key, F.lit("/_"), _c(source), F.lit("_description"))
-
-
-def last_updated_key(tbl_key: Column) -> Column:
-    return F.concat(tbl_key, F.lit("/timestamp"))
-
-
-def watermark_key(tbl_key: Column, part_type: Column | str) -> Column:
-    return F.concat(tbl_key, F.lit("/"), _c(part_type), F.lit("/"))
-
-
-def stat_key(col_key: Column, stat_name: Column | str) -> Column:
-    return F.concat(col_key, F.lit("/"), _c(stat_name), F.lit("/"))
-
-
-def source_key(tbl_key: Column) -> Column:
-    return F.concat(tbl_key, F.lit("/_source"))
-
-
-def tag_key(tag: Column | str) -> Column:
-    """Tags are trimmed + lower-cased (reference ``_format_as_list``)."""
-    return F.lower(F.trim(_c(tag)))
-
-
-def application_key(dag: Column | str, task: Column | str,
-                    cluster: Column | str = CLUSTER) -> Column:
-    return F.concat(F.lit("application://"), _c(cluster), F.lit(".airflow/"),
-                    _c(dag), F.lit("/"), _c(task))
+def table_key_sql(schema: str, table: str, cluster: str = CLUSTER,
+                  db: str = DATABASE) -> str:
+    return f"concat({sql_str(cluster_key_str(cluster, db) + '.')}, {schema}, '/', {table})"
 
 
 # ---- plain-string forms (driver / tests / fixtures) ------------------------

@@ -202,7 +202,10 @@ def repetition_signals(df: DataFrame, id_col: str = "doc_id",
     dominated by repeated lines or n-grams; the test corpus is single-line
     word streams, so the word- and bigram-level analogues are computed:
 
-    * ``n_words`` — whitespace token count.
+    * ``n_words`` — whitespace token count. Blank (empty or
+      whitespace-only) text splits into one empty token, so it counts
+      ``n_words = 1`` (``distinct_words = 1``, no bigrams); null text
+      gives null counts.
     * ``distinct_words`` — distinct lowercased tokens.
     * ``top_word_count`` — occurrences of the single most frequent token
       (the "fraction of tokens in the most common n-gram" signal, n=1).

@@ -18,16 +18,61 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from amundsendatabuilder_spark.operators.models import (
-    NODE_SCHEMA,  # noqa: F401  (same shapes)
-    _node,
-    _rel,
-    _smap,
-    _tmap,
-)
+from amundsendatabuilder_spark.operators.models import NODE_SCHEMA  # noqa: F401  (same shapes)
+
+
+# Column-built node/relation families for the catalog, dashboard and sample
+# channels (one pass per scan); the CDC epoch expansion in ``models`` builds
+# the same shapes from SQL text.
+
+def _smap(**kv: Column | str) -> Column:
+    """map<string,string> literal from name→Column pairs (nulls kept)."""
+    parts: list[Column] = []
+    for k, v in kv.items():
+        parts.append(F.lit(k))
+        parts.append((v if isinstance(v, Column) else F.lit(v)).cast("string"))
+    return F.create_map(*parts)
+
+
+def _tmap(**kv: str) -> Column:
+    if not kv:
+        return F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
+    parts: list[Column] = []
+    for k, v in kv.items():
+        parts += [F.lit(k), F.lit(v)]
+    return F.create_map(*parts)
+
+
+def _node(e: DataFrame, key: Column, label: str, attrs: Column,
+          types: Column | None = None) -> DataFrame:
+    return e.select(
+        key.alias("key"),
+        F.lit(label).alias("label"),
+        attrs.alias("attributes"),
+        (types if types is not None else _tmap()).alias("attr_types"),
+        F.lit(None).cast("string").alias("scope_key"),
+    )
+
+
+def _rel(e: DataFrame, sk: Column, sl: str, ek: Column, el: str, typ: str,
+         rtyp: str, attrs: Column | None = None,
+         types: Column | None = None) -> DataFrame:
+    null_map = F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
+    return e.select(
+        sk.alias("start_key"),
+        F.lit(sl).alias("start_label"),
+        ek.alias("end_key"),
+        F.lit(el).alias("end_label"),
+        F.lit(typ).alias("type"),
+        F.lit(rtyp).alias("reverse_type"),
+        (attrs if attrs is not None else null_map).alias("attributes"),
+        (types if types is not None else null_map).alias("attr_types"),
+        F.lit(None).cast("string").alias("scope_key"),
+    )
 
 
 def _u(dfs):

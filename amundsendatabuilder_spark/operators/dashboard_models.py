@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from amundsendatabuilder_spark.operators.models import _node, _rel, _smap, _tmap
+from amundsendatabuilder_spark.operators.amundsen_models import _node, _rel, _smap, _tmap
 
 LAST_SUCCESSFUL_EXECUTION_ID = "_last_successful_execution"
 LAST_EXECUTION_ID = "_last_execution"

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from amundsendatabuilder_spark.functions.sqltext import sql_ident
+
 
 def lww_dedup(
     df: DataFrame,
@@ -49,9 +51,10 @@ def lww_dedup_agg(
     keys = list(key_cols)
     payload = [c for c in df.columns if c not in keys]
     ordered = [c for c in order_cols] + [c for c in payload if c not in order_cols]
-    winner = F.max(F.struct(*ordered)).alias("__w")
+    winner = F.expr(f"max(struct({', '.join(map(sql_ident, ordered))})) AS __w")
     return (
         df.groupBy(*keys)
         .agg(winner)
-        .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload])
+        .selectExpr(*map(sql_ident, keys),
+                    *[f"__w.{sql_ident(c)} AS {sql_ident(c)}" for c in payload])
     )

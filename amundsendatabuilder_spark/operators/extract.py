@@ -2,9 +2,10 @@
 
 The reference extracts metadata entities record-at-a-time in Python model
 constructors (``databuilder/models/table_metadata.py:193``); here the entire
-extraction is JVM-side column expressions (regexp/sha2/split — whole-stage
-codegen, zero Python in the hot path), which is the vectorized-or-better
-version of the input_hint's "pandas/Arrow UDFs, no per-row Python".
+extraction is Spark SQL expression text (regexp/sha2/higher-order array
+functions — parsed once by the JVM, whole-stage codegen, zero Python per row
+or per expression node), which is the vectorized-or-better version of the
+input_hint's "pandas/Arrow UDFs, no per-row Python".
 
 Mapping (SURVEY §1.2): db=``repofs``, cluster=``gold``, schema=``repo``,
 table=``path``; per-file extracted functions ≈ columns; owner derived from
@@ -15,9 +16,9 @@ commit; version watermark from the content header; per-row invariant
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.functions import keys as K
+from amundsendatabuilder_spark.functions.sqltext import sql_str
 
 # function-definition patterns per language (generator emits python-style
 # `def` for all langs; real-world patterns kept for the lang-aware path)
@@ -27,75 +28,59 @@ _FN_PATTERNS = {
     "java": r"(?:void|int|String) (\w+)\(",
 }
 _DEFAULT_FN_PATTERN = r"def (\w+)\("
+_COMMENT_PATTERN = r"return [^\n#]*#\s*([^\n]*)"
+_VERSION_PATTERN = r" v(\d+)\n"
 
 
 def extract_entities(upserts: DataFrame, cluster: str = K.CLUSTER) -> DataFrame:
     """Enrich LWW-deduped upsert rows with every derived entity feature the
     model expansion needs. Input: (repo, path, commit, lang, content,
     event_ts[, ...]); one row per (repo, path)."""
-    pattern = F.lit(_DEFAULT_FN_PATTERN)
-    for lang, pat in _FN_PATTERNS.items():
-        pattern = F.when(F.col("lang") == lang, F.lit(pat)).otherwise(pattern)
-
-    tbl_key = K.table_key(F.col("repo"), F.col("path"), cluster)
+    pattern = "CASE " + " ".join(
+        f"WHEN lang = {sql_str(lang)} THEN {sql_str(pat)}"
+        for lang, pat in _FN_PATTERNS.items()
+    ) + f" ELSE {sql_str(_DEFAULT_FN_PATTERN)} END"
     return (
-        upserts.withColumn("database", F.lit(K.DATABASE))
-        .withColumn("cluster", F.lit(cluster))
-        .withColumn("database_key", K.database_key())
-        .withColumn("cluster_key", K.cluster_key(cluster))
-        .withColumn("schema_key", K.schema_key(F.col("repo"), cluster))
-        .withColumn("table_key", tbl_key)
-        .withColumn("content_sha256", F.sha2(F.col("content"), 256))
-        .withColumn("description", F.substring_index(F.col("content"), "\n", 1))
+        upserts.selectExpr(
+            "*",
+            f"regexp_extract_all(content, {pattern}, 1) AS __fn_raw",
+            f"regexp_extract_all(content, {sql_str(_COMMENT_PATTERN)}, 1) AS __cm_raw",
+        )
         # function names + their trailing body comments (≈ column descriptions,
         # reference ColumnMetadata.description / Column→Description nodes,
         # ``databuilder/models/table_metadata.py:156-190``). Dedup by name:
         # duplicate function names in one file would expand to duplicate
         # Column-node keys, and the keyed MERGE requires the batch to be
         # unique per key (ADVICE r01). First occurrence keeps its rank and
-        # comment — deterministic.
-        .withColumn("__fn_raw", F.regexp_extract_all(F.col("content"), pattern, F.lit(1)))
-        .withColumn(
-            "__cm_raw",
-            F.regexp_extract_all(F.col("content"), F.lit(r"return [^\n#]*#\s*([^\n]*)"), F.lit(1)),
+        # comment — deterministic. Comments align positionally only when
+        # every function body carries one; otherwise descriptions are unknown.
+        .selectExpr(
+            "*",
+            """filter(
+                transform(__fn_raw, (fn, i) -> named_struct(
+                    'fn', fn,
+                    'comment', CASE WHEN size(__cm_raw) = size(__fn_raw)
+                                    THEN element_at(__cm_raw, i + 1) END)),
+                (p, i) -> array_position(__fn_raw, p.fn) = i + 1) AS __fn_pairs""",
         )
-        .withColumn(
-            "__fn_pairs",
-            F.filter(
-                F.transform(
-                    "__fn_raw",
-                    lambda fn, i: F.struct(
-                        fn.alias("fn"),
-                        # comments align positionally only when every function
-                        # body carries one; otherwise descriptions are unknown
-                        F.when(
-                            F.size("__cm_raw") == F.size("__fn_raw"),
-                            F.element_at("__cm_raw", i + F.lit(1)),
-                        ).alias("comment"),
-                    ),
-                ),
-                lambda p, i: F.array_position(F.col("__fn_raw"), p["fn"]) == i + 1,
-            ),
+        .selectExpr(
+            "*",
+            f"{sql_str(K.DATABASE)} AS database",
+            f"{sql_str(cluster)} AS cluster",
+            f"{sql_str(K.database_key_str())} AS database_key",
+            f"{sql_str(K.cluster_key_str(cluster))} AS cluster_key",
+            f"{K.schema_key_sql('repo', cluster)} AS schema_key",
+            f"{K.table_key_sql('repo', 'path', cluster)} AS table_key",
+            "sha2(content, 256) AS content_sha256",
+            f"substring_index(content, {sql_str(chr(10))}, 1) AS description",
+            "__fn_pairs.fn AS functions",
+            "__fn_pairs.comment AS fn_comments",
+            f"""coalesce(CAST(nullif(regexp_extract(content, {sql_str(_VERSION_PATTERN)}, 1), '')
+                              AS BIGINT), 0) AS version""",
+            """concat('user_',
+                      CAST(CAST(conv(substring(`commit`, 1, 4), 16, 10) AS BIGINT) % 50 AS STRING),
+                      '@example.com') AS owner_email""",
+            "unix_timestamp(event_ts) AS last_updated_epoch",
         )
-        .withColumn("functions", F.col("__fn_pairs.fn"))
-        .withColumn("fn_comments", F.col("__fn_pairs.comment"))
         .drop("__fn_raw", "__cm_raw", "__fn_pairs")
-        .withColumn(
-            "version",
-            F.coalesce(
-                F.nullif(
-                    F.regexp_extract(F.col("content"), r" v(\d+)\n", 1), F.lit("")
-                ).cast("long"),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
-            "owner_email",
-            F.concat(
-                F.lit("user_"),
-                (F.conv(F.substring(F.col("commit"), 1, 4), 16, 10).cast("long") % 50).cast("string"),
-                F.lit("@example.com"),
-            ),
-        )
-        .withColumn("last_updated_epoch", F.unix_timestamp(F.col("event_ts")))
     )

@@ -4,10 +4,12 @@ Re-expresses the reference's ``GraphSerializable`` iterators
 (``databuilder/models/graph_serializable.py:21-61``; ``TableMetadata``
 expansion ``databuilder/models/table_metadata.py:334-503``; owner
 ``table_owner.py:59-95``; last-updated ``table_last_updated.py:74-107``;
-watermark ``watermark.py:74-104``) as pure ``select``/``explode`` DataFrame
-transforms unioned into long-format node/relation frames — unions are
-plan-level (no shuffle). Shared Database/Cluster/Schema/User rows repeat once
-per entity; the pipeline's keyed aggregate keeps one per key, equivalent to
+watermark ``watermark.py:74-104``) as Spark SQL expression text — one
+``selectExpr`` per node/relation family (``posexplode``/``explode`` for the
+per-function families), parsed once by the JVM — unioned into long-format
+node/relation frames; unions are plan-level (no shuffle). Shared
+Database/Cluster/Schema/User rows repeat once per entity; the pipeline's
+keyed aggregate keeps one per key, equivalent to
 the reference's class-level first-writer-wins dedup sets
 (``table_metadata.py:232-234``; payload is key-determined so LWW==FWW).
 
@@ -30,9 +32,10 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from amundsendatabuilder_spark.functions.sqltext import sql_ident, sql_str
 
 NODE_SCHEMA = T.StructType(
     [
@@ -62,52 +65,55 @@ REL_SCHEMA = T.StructType(
 SHARED_LABELS = ("Database", "Cluster", "Schema", "User")
 
 
-def _smap(**kv: Column | str) -> Column:
-    """map<string,string> literal from name→Column pairs (nulls kept)."""
-    parts: list[Column] = []
-    for k, v in kv.items():
-        parts.append(F.lit(k))
-        parts.append((v if isinstance(v, Column) else F.lit(v)).cast("string"))
-    return F.create_map(*parts)
+_NULL_MAP = "CAST(NULL AS MAP<STRING, STRING>)"
+_NULL_STR = "CAST(NULL AS STRING)"
+# one (function name, trailing comment) struct per extracted function
+_FN_ZIP = "zip_with(functions, fn_comments, (fn, cm) -> named_struct('fn', fn, 'cm', cm))"
 
 
-def _tmap(**kv: str) -> Column:
+def _smap(**kv: str) -> str:
+    """map<string,string> from name → SQL expression pairs (nulls kept)."""
+    return "map(" + ", ".join(
+        f"{sql_str(k)}, CAST({v} AS STRING)" for k, v in kv.items()) + ")"
+
+
+def _tmap(**kv: str) -> str:
     if not kv:
-        return F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
-    parts: list[Column] = []
-    for k, v in kv.items():
-        parts += [F.lit(k), F.lit(v)]
-    return F.create_map(*parts)
+        return _NULL_MAP
+    return "map(" + ", ".join(
+        f"{sql_str(k)}, {sql_str(v)}" for k, v in kv.items()) + ")"
 
 
-def _node(e: DataFrame, key: Column, label: str, attrs: Column,
-          types: Column | None = None, scope: Column | None = None,
+def _node(e: DataFrame, key: str, label: str, attrs: str,
+          types: str | None = None, scope: str | None = None,
           carry: tuple[str, ...] = ()) -> DataFrame:
-    return e.select(
-        key.alias("key"),
-        F.lit(label).alias("label"),
-        attrs.alias("attributes"),
-        (types if types is not None else _tmap()).alias("attr_types"),
-        (scope if scope is not None else F.lit(None).cast("string")).alias("scope_key"),
-        *carry,
+    """One node family: ``key``/``attrs``/``types``/``scope`` are SQL
+    expressions over ``e``; ``carry`` names columns of ``e`` copied over."""
+    return e.selectExpr(
+        f"{key} AS key",
+        f"{sql_str(label)} AS label",
+        f"{attrs} AS attributes",
+        f"{types or _tmap()} AS attr_types",
+        f"{scope or _NULL_STR} AS scope_key",
+        *map(sql_ident, carry),
     )
 
 
-def _rel(e: DataFrame, sk: Column, sl: str, ek: Column, el: str, typ: str,
-         rtyp: str, attrs: Column | None = None, types: Column | None = None,
-         scope: Column | None = None, carry: tuple[str, ...] = ()) -> DataFrame:
-    null_map = F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
-    return e.select(
-        sk.alias("start_key"),
-        F.lit(sl).alias("start_label"),
-        ek.alias("end_key"),
-        F.lit(el).alias("end_label"),
-        F.lit(typ).alias("type"),
-        F.lit(rtyp).alias("reverse_type"),
-        (attrs if attrs is not None else null_map).alias("attributes"),
-        (types if types is not None else null_map).alias("attr_types"),
-        (scope if scope is not None else F.lit(None).cast("string")).alias("scope_key"),
-        *carry,
+def _rel(e: DataFrame, sk: str, sl: str, ek: str, el: str, typ: str,
+         rtyp: str, attrs: str | None = None, types: str | None = None,
+         scope: str | None = None, carry: tuple[str, ...] = ()) -> DataFrame:
+    """One relation family, in the SQL-expression terms of :func:`_node`."""
+    return e.selectExpr(
+        f"{sk} AS start_key",
+        f"{sql_str(sl)} AS start_label",
+        f"{ek} AS end_key",
+        f"{sql_str(el)} AS end_label",
+        f"{sql_str(typ)} AS type",
+        f"{sql_str(rtyp)} AS reverse_type",
+        f"{attrs or _NULL_MAP} AS attributes",
+        f"{types or _NULL_MAP} AS attr_types",
+        f"{scope or _NULL_STR} AS scope_key",
+        *map(sql_ident, carry),
     )
 
 
@@ -122,37 +128,22 @@ def nodes_from_entities(e: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     the caller's keyed aggregate keeps one. ``carry`` names columns of ``e``
     copied onto every node row."""
     node = functools.partial(_node, carry=carry)
-    tkey = F.col("table_key")
-    scope = tkey
-    desc_key = F.concat(tkey, F.lit("/_description"))
-    ts_key = F.concat(tkey, F.lit("/timestamp"))
-    wm_key = F.concat(tkey, F.lit("/high_watermark/"))
-
-    cols = e.select(
-        "table_key", "lang", *carry,
-        F.posexplode(
-            F.zip_with(
-                "functions", "fn_comments",
-                lambda fn, cm: F.struct(fn.alias("fn"), cm.alias("cm")),
-            )
-        ).alias("sort_order", "p"),
-    ).select(
-        "table_key", "lang", "sort_order", *carry,
-        F.col("p.fn").alias("fn_name"), F.col("p.cm").alias("fn_comment"),
-    )
+    scope = "table_key"
+    keep = [sql_ident(c) for c in ("table_key", "lang", *carry)]
+    cols = e.selectExpr(*keep, f"posexplode({_FN_ZIP}) AS (sort_order, p)").selectExpr(
+        *keep, "sort_order", "p.fn AS fn_name", "p.cm AS fn_comment")
 
     shared = _union(
         [
-            node(e, F.col("database_key"), "Database", _smap(name=F.col("database"))),
-            node(e, F.col("cluster_key"), "Cluster", _smap(name=F.col("cluster"))),
-            node(e, F.col("schema_key"), "Schema", _smap(name=F.col("repo"))),
+            node(e, "database_key", "Database", _smap(name="database")),
+            node(e, "cluster_key", "Cluster", _smap(name="cluster")),
+            node(e, "schema_key", "Schema", _smap(name="repo")),
             # full_name = email: the changelog has no profile names; non-null
             # full_name keeps these users visible to the user search query
             # (reference filters `WHERE user.full_name IS NOT NULL`,
             # neo4j_search_data_extractor.py:72)
-            node(e, F.col("owner_email"), "User",
-                 _smap(email=F.col("owner_email"),
-                       full_name=F.col("owner_email"), is_active=F.lit(True)),
+            node(e, "owner_email", "User",
+                 _smap(email="owner_email", full_name="owner_email", is_active="true"),
                  _tmap(is_active="bool")),
         ]
     )
@@ -160,48 +151,41 @@ def nodes_from_entities(e: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     scoped = _union(
         [
             node(
-                e, tkey, "Table",
-                _smap(name=F.col("path"), is_view=F.lit(False),
-                      content_sha256=F.col("content_sha256"),
-                      commit=F.col("commit"), lang=F.col("lang")),
+                e, "table_key", "Table",
+                _smap(name="path", is_view="false", content_sha256="content_sha256",
+                      commit="`commit`", lang="lang"),
                 _tmap(is_view="bool"), scope,
             ),
             node(
-                e.where(F.col("description").isNotNull()), desc_key, "Description",
-                _smap(description=F.col("description"),
-                      description_source=F.lit("description")),
+                e.where("description IS NOT NULL"),
+                "concat(table_key, '/_description')", "Description",
+                _smap(description="description", description_source="'description'"),
                 None, scope,
             ),
             node(
-                cols,
-                F.concat(F.col("table_key"), F.lit("/"), F.col("fn_name")), "Column",
-                _smap(name=F.col("fn_name"), type=F.col("lang"),
-                      sort_order=F.col("sort_order")),
-                _tmap(sort_order="int"), F.col("table_key"),
+                cols, "concat(table_key, '/', fn_name)", "Column",
+                _smap(name="fn_name", type="lang", sort_order="sort_order"),
+                _tmap(sort_order="int"), scope,
             ),
             # per-column Description node (reference column description,
             # ``table_metadata.py:123-127,176-180``): key = {col_key}/_description
             node(
-                cols.where(F.col("fn_comment").isNotNull()),
-                F.concat(F.col("table_key"), F.lit("/"), F.col("fn_name"),
-                         F.lit("/_description")),
-                "Description",
-                _smap(description=F.col("fn_comment"),
-                      description_source=F.lit("description")),
-                None, F.col("table_key"),
+                cols.where("fn_comment IS NOT NULL"),
+                "concat(table_key, '/', fn_name, '/_description')", "Description",
+                _smap(description="fn_comment", description_source="'description'"),
+                None, scope,
             ),
             node(
-                e, ts_key, "Timestamp",
-                _smap(last_updated_timestamp=F.col("last_updated_epoch"),
-                      timestamp=F.col("last_updated_epoch"),
-                      name=F.lit("last_updated_timestamp")),
+                e, "concat(table_key, '/timestamp')", "Timestamp",
+                _smap(last_updated_timestamp="last_updated_epoch",
+                      timestamp="last_updated_epoch",
+                      name="'last_updated_timestamp'"),
                 _tmap(last_updated_timestamp="int", timestamp="int"), scope,
             ),
             node(
-                e, wm_key, "Watermark",
-                _smap(partition_key=F.lit("version"),
-                      partition_value=F.col("version"),
-                      create_time=F.col("event_ts")),
+                e, "concat(table_key, '/high_watermark/')", "Watermark",
+                _smap(partition_key="'version'", partition_value="version",
+                      create_time="event_ts"),
                 None, scope,
             ),
         ]
@@ -214,54 +198,41 @@ def relations_from_entities(e: DataFrame, carry: tuple[str, ...] = ()) -> DataFr
     Shared relations repeat per entity row and ``carry`` is copied, as in
     :func:`nodes_from_entities`."""
     rel = functools.partial(_rel, carry=carry)
-    tkey = F.col("table_key")
-    scope = tkey
-    desc_key = F.concat(tkey, F.lit("/_description"))
-    ts_key = F.concat(tkey, F.lit("/timestamp"))
-    wm_key = F.concat(tkey, F.lit("/high_watermark/"))
-
-    cols = e.select(
-        "table_key", *carry,
-        F.explode(
-            F.zip_with(
-                "functions", "fn_comments",
-                lambda fn, cm: F.struct(fn.alias("fn"), cm.alias("cm")),
-            )
-        ).alias("p"),
-    ).select(
-        "table_key", *carry,
-        F.col("p.fn").alias("fn_name"), F.col("p.cm").alias("fn_comment"),
-    )
-    col_key = F.concat(F.col("table_key"), F.lit("/"), F.col("fn_name"))
+    tkey = scope = "table_key"
+    desc_key = "concat(table_key, '/_description')"
+    keep = [sql_ident(c) for c in ("table_key", *carry)]
+    cols = e.selectExpr(*keep, f"explode({_FN_ZIP}) AS p").selectExpr(
+        *keep, "p.fn AS fn_name", "p.cm AS fn_comment")
+    col_key = "concat(table_key, '/', fn_name)"
 
     shared = _union(
         [
-            rel(e, F.col("database_key"), "Database", F.col("cluster_key"),
+            rel(e, "database_key", "Database", "cluster_key",
                 "Cluster", "CLUSTER", "CLUSTER_OF"),
-            rel(e, F.col("cluster_key"), "Cluster", F.col("schema_key"),
+            rel(e, "cluster_key", "Cluster", "schema_key",
                 "Schema", "SCHEMA", "SCHEMA_OF"),
         ]
     )
 
     scoped = _union(
         [
-            rel(e, F.col("schema_key"), "Schema", tkey, "Table",
+            rel(e, "schema_key", "Schema", tkey, "Table",
                 "TABLE", "TABLE_OF", scope=scope),
-            rel(e.where(F.col("description").isNotNull()), tkey, "Table",
+            rel(e.where("description IS NOT NULL"), tkey, "Table",
                 desc_key, "Description", "DESCRIPTION", "DESCRIPTION_OF", scope=scope),
-            rel(cols, F.col("table_key"), "Table", col_key, "Column",
-                "COLUMN", "COLUMN_OF", scope=F.col("table_key")),
+            rel(cols, tkey, "Table", col_key, "Column",
+                "COLUMN", "COLUMN_OF", scope=scope),
             rel(
-                cols.where(F.col("fn_comment").isNotNull()),
+                cols.where("fn_comment IS NOT NULL"),
                 col_key, "Column",
-                F.concat(col_key, F.lit("/_description")), "Description",
-                "DESCRIPTION", "DESCRIPTION_OF", scope=F.col("table_key"),
+                "concat(table_key, '/', fn_name, '/_description')", "Description",
+                "DESCRIPTION", "DESCRIPTION_OF", scope=scope,
             ),
-            rel(e, F.col("owner_email"), "User", tkey, "Table",
+            rel(e, "owner_email", "User", tkey, "Table",
                 "OWNER_OF", "OWNER", scope=scope),
-            rel(e, tkey, "Table", ts_key, "Timestamp",
+            rel(e, tkey, "Table", "concat(table_key, '/timestamp')", "Timestamp",
                 "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF", scope=scope),
-            rel(e, wm_key, "Watermark", tkey, "Table",
+            rel(e, "concat(table_key, '/high_watermark/')", "Watermark", tkey, "Table",
                 "BELONG_TO_TABLE", "WATERMARK", scope=scope),
         ]
     )
@@ -274,9 +245,8 @@ def usage_user_nodes(usage: DataFrame) -> DataFrame:
     ``User(email=...)`` per reader). Input: (table_key, user_email, ...)."""
     u = usage.select("user_email").dropDuplicates(["user_email"])
     return _node(
-        u, F.col("user_email"), "User",
-        _smap(email=F.col("user_email"), full_name=F.col("user_email"),
-              is_active=F.lit(True)),
+        u, "user_email", "User",
+        _smap(email="user_email", full_name="user_email", is_active="true"),
         _tmap(is_active="bool"),
     )
 
@@ -287,12 +257,8 @@ def usage_relations(usage: DataFrame) -> DataFrame:
     ``databuilder/models/table_column_usage.py:85-99``). Input rows:
     (table_key, user_email, read_count) — one row per pair (pre-aggregated)."""
     return _rel(
-        usage,
-        F.col("table_key"), "Table",
-        F.col("user_email"), "User",
-        "READ_BY", "READ",
-        attrs=_smap(read_count=F.col("read_count")),
-        types=_tmap(read_count="int"),
+        usage, "table_key", "Table", "user_email", "User", "READ_BY", "READ",
+        attrs=_smap(read_count="read_count"), types=_tmap(read_count="int"),
     )
 
 
@@ -301,19 +267,13 @@ def validate_nodes(nodes: DataFrame) -> DataFrame:
     non-null, label title-cased in PYTHON ``str.istitle`` semantics — any
     non-letter starts a new word, so ``Programmatic_Description`` is valid
     (Spark ``initcap`` only splits on whitespace and would reject it)."""
-    return nodes.where(
-        F.col("key").isNotNull()
-        & F.col("label").isNotNull()
-        & F.col("label").rlike(
-            r"^[^a-zA-Z]*[A-Z][a-z]*([^a-zA-Z]+[A-Z][a-z]*)*[^a-zA-Z]*$")
-    )
+    title = sql_str(r"^[^a-zA-Z]*[A-Z][a-z]*([^a-zA-Z]+[A-Z][a-z]*)*[^a-zA-Z]*$")
+    return nodes.where(f"key IS NOT NULL AND label IS NOT NULL AND label RLIKE {title}")
 
 
 def validate_relations(rels: DataFrame) -> DataFrame:
     """TYPE must be uppercase, labels title-cased, keys non-null."""
     return rels.where(
-        F.col("start_key").isNotNull()
-        & F.col("end_key").isNotNull()
-        & (F.col("type") == F.upper(F.col("type")))
-        & (F.col("reverse_type") == F.upper(F.col("reverse_type")))
+        "start_key IS NOT NULL AND end_key IS NOT NULL"
+        " AND type = upper(type) AND reverse_type = upper(reverse_type)"
     )

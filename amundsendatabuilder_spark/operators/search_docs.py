@@ -50,44 +50,38 @@ def docs_from_entities(e: DataFrame, usage: DataFrame | None = None) -> DataFram
     state (reference ``SUM(read.read_count)`` / ``COUNT(DISTINCT user.email)``,
     ``neo4j_search_data_extractor.py:40-42``) — left-joined in; absent keys
     get 0, matching the Cypher OPTIONAL MATCH."""
-    empty = F.array().cast(T.ArrayType(T.StringType()))
-    out = e.select(
-        F.col("table_key").alias("key"),
-        F.col("database"),
-        F.col("cluster"),
-        F.col("repo").alias("schema"),
-        F.col("path").alias("name"),
-        F.concat_ws(".", F.col("repo"), F.col("path")).alias("display_name"),
-        F.col("description"),
-        F.col("last_updated_epoch").alias("last_updated_timestamp"),
-        F.col("functions").alias("column_names"),
+    empty = "CAST(array() AS ARRAY<STRING>)"
+    head = [
+        "table_key AS key",
+        "database",
+        "cluster",
+        "repo AS schema",
+        "path AS name",
+        "concat_ws('.', repo, path) AS display_name",
+        "description",
+        "last_updated_epoch AS last_updated_timestamp",
+        "functions AS column_names",
         # non-null trailing comments in column order (Cypher COLLECT skips
         # nulls, so alignment with column_names is best-effort — same as ref)
-        F.filter(F.col("fn_comments"), lambda c: c.isNotNull()).alias(
-            "column_descriptions"
-        ),
-        F.array(F.col("lang")).alias("tags"),
-        empty.alias("badges"),
-        F.lit(None).cast("string").alias("schema_description"),
-        empty.alias("programmatic_descriptions"),
-    )
+        "filter(fn_comments, c -> c IS NOT NULL) AS column_descriptions",
+    ]
+    tail = [
+        "array(lang) AS tags",
+        f"{empty} AS badges",
+        "CAST(NULL AS STRING) AS schema_description",
+        f"{empty} AS programmatic_descriptions",
+    ]
     if usage is None:
-        return out.select(
-            *out.columns[:10],
-            F.lit(0).cast("long").alias("total_usage"),
-            F.lit(0).cast("long").alias("unique_usage"),
-            *out.columns[10:],
-        )
-    u = usage.select(
-        "key",
-        F.col("total_usage").cast("long").alias("__tu"),
-        F.col("unique_usage").cast("long").alias("__uu"),
-    )
-    return out.join(u, "key", "left").select(
-        *out.columns[:10],
-        F.coalesce(F.col("__tu"), F.lit(0)).cast("long").alias("total_usage"),
-        F.coalesce(F.col("__uu"), F.lit(0)).cast("long").alias("unique_usage"),
-        *out.columns[10:],
+        return e.selectExpr(*head, "CAST(0 AS BIGINT) AS total_usage",
+                            "CAST(0 AS BIGINT) AS unique_usage", *tail)
+    u = usage.selectExpr("key", "CAST(total_usage AS BIGINT) AS __tu",
+                         "CAST(unique_usage AS BIGINT) AS __uu")
+    names = [f.name for f in DOC_SCHEMA.fields if "usage" not in f.name]
+    return e.selectExpr(*head, *tail).join(u, "key", "left").selectExpr(
+        *names[:10],
+        "CAST(coalesce(__tu, 0) AS BIGINT) AS total_usage",
+        "CAST(coalesce(__uu, 0) AS BIGINT) AS unique_usage",
+        *names[10:],
     )
 
 

@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from amundsendatabuilder_spark.functions.sqltext import sql_ident, sql_str, sql_type
+
 LINEAGE_COLS = [("publish_tag", T.StringType()), ("updated_ms", T.LongType())]
 
 # merge-on-read service columns (stored in mor data files)
@@ -68,8 +70,16 @@ MOR_DEL = "__mor_deleted"      # delete marker row
 MOR_CO = "__mor_create_only"   # first-writer-wins row (create-only labels)
 
 
-def _bucket_expr(key_cols: list[str], n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+def _bucket_sql(key_cols: list[str], n_buckets: int, qualifier: str = "") -> str:
+    """SQL text of a row's bucket, ``pmod(xxhash64(keys), n_buckets)``;
+    ``qualifier`` names the relation the key columns belong to."""
+    q = f"{sql_ident(qualifier)}." if qualifier else ""
+    cols = ", ".join(q + sql_ident(c) for c in key_cols)
+    return f"CAST(pmod(xxhash64({cols}), {int(n_buckets)}) AS INT)"
+
+
+def _bucket_expr(key_cols: list[str], n_buckets: int, qualifier: str = ""):
+    return F.expr(_bucket_sql(key_cols, n_buckets, qualifier))
 
 
 # Spark's XXH64 (catalyst ``XXH64``/``XxHash64Function``) on the driver, so a
@@ -420,42 +430,40 @@ class SnapshotTable:
         maps, which are not orderable. ``keep_service`` also emits the
         winner's ``__seq``/``__co`` (compaction rewrites keep merge order)."""
         payload = [f.name for f in schema.fields if f.name not in keys]
-        dele = F.coalesce(F.col(MOR_DEL), F.lit(False))
-        co = F.coalesce(F.col(MOR_CO), F.lit(False))
-        row = F.struct(F.col(MOR_SEQ).alias(MOR_SEQ), *[F.col(c) for c in payload])
-        row_t = SnapshotTable._relax(T.StructType(
+        row = f"struct({', '.join(map(sql_ident, [MOR_SEQ, *payload]))})"
+        row_t = sql_type(SnapshotTable._relax(T.StructType(
             [T.StructField(MOR_SEQ, T.LongType())]
-            + [schema[c] for c in payload]))
-        nc = ~dele & ~co
-        agg = raw.groupBy(*keys).agg(
-            F.max(F.when(dele, F.col(MOR_SEQ))).alias("__cut"),
-            F.max_by(F.when(nc, row), F.when(nc, F.col(MOR_SEQ))).alias("__nc"),
-            F.collect_list(F.when(~dele & co, row)).alias("__cos"),
-        )
-        cut = F.coalesce(F.col("__cut"), F.lit(-(1 << 63)))
-        nc_wins = F.coalesce(F.col(f"__nc.{MOR_SEQ}") > cut, F.lit(False))
-        first_co = F.aggregate(
-            "__cos", F.lit(None).cast(row_t),
-            lambda acc, x: F.when(
-                (x[MOR_SEQ] > cut) & (acc.isNull() | (x[MOR_SEQ] < acc[MOR_SEQ])), x
-            ).otherwise(acc),
+            + [schema[c] for c in payload])))
+        dele = f"coalesce({MOR_DEL}, false)"
+        co = f"coalesce({MOR_CO}, false)"
+        nc = f"NOT {dele} AND NOT {co}"
+        cut = "coalesce(__cut, -9223372036854775808L)"
+        nc_wins = f"coalesce(__nc.{MOR_SEQ} > {cut}, false)"
+        first_co = (
+            f"aggregate(__cos, CAST(NULL AS {row_t}), (acc, x) -> CASE WHEN"
+            f" x.{MOR_SEQ} > {cut} AND (acc IS NULL OR x.{MOR_SEQ} < acc.{MOR_SEQ})"
+            " THEN x ELSE acc END)"
         )
         out_extra = (
-            [
-                F.col(f"__w.{MOR_SEQ}").alias(MOR_SEQ),
-                F.lit(False).alias(MOR_DEL),
-                (~F.col("__nc_wins")).alias(MOR_CO),
-            ]
+            [f"__w.{MOR_SEQ} AS {MOR_SEQ}", f"false AS {MOR_DEL}",
+             f"NOT __nc_wins AS {MOR_CO}"]
             if keep_service
             else []
         )
+        k = [sql_ident(c) for c in keys]
         return (
-            agg.select(
-                *keys, nc_wins.alias("__nc_wins"),
-                F.when(nc_wins, F.col("__nc")).otherwise(first_co).alias("__w"),
+            raw.groupBy(*keys).agg(
+                F.expr(f"max(CASE WHEN {dele} THEN {MOR_SEQ} END) AS __cut"),
+                F.expr(f"max_by(CASE WHEN {nc} THEN {row} END,"
+                       f" CASE WHEN {nc} THEN {MOR_SEQ} END) AS __nc"),
+                F.expr(f"collect_list(CASE WHEN NOT {dele} AND {co} THEN {row} END)"
+                       " AS __cos"),
             )
-            .where(F.col("__w").isNotNull())
-            .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload], *out_extra)
+            .selectExpr(*k, f"{nc_wins} AS __nc_wins",
+                        f"CASE WHEN {nc_wins} THEN __nc ELSE {first_co} END AS __w")
+            .where("__w IS NOT NULL")
+            .selectExpr(*k, *[f"__w.{sql_ident(c)} AS {sql_ident(c)}" for c in payload],
+                        *out_extra)
         )
 
     @staticmethod
@@ -491,8 +499,8 @@ class SnapshotTable:
                 self._all_files(snap, buckets), self._mor_schema(snap.schema())
             )
             if buckets is not None:
-                raw = raw.where(_bucket_expr(snap.key_cols, snap.n_buckets)
-                                .isin(list(buckets)))
+                raw = raw.where(f"{_bucket_sql(snap.key_cols, snap.n_buckets)}"
+                                f" IN ({', '.join(map(str, buckets))})")
             return self._resolve(raw, snap.schema(), snap.key_cols)
         return self._read_files(self._all_files(snap, buckets), snap.schema())
 
@@ -802,26 +810,23 @@ class SnapshotTable:
         # ONE aggregate job yields the touched buckets AND the key bounding
         # box (plus a null-key flag: parquet bounds say nothing about nulls,
         # so any null key disables box pruning — bucket pruning still holds)
-        aggs = [F.collect_set(F.col("__b")).alias("__bs")]
-        for k in snap.key_cols:
-            aggs += [
-                F.min(k).alias(f"__mn_{k}"),
-                F.max(k).alias(f"__mx_{k}"),
-                F.max(F.col(k).isNull().cast("int")).alias(f"__null_{k}"),
-            ]
+        aggs = ["collect_set(__b) AS __bs"]
+        for i, k in enumerate(map(sql_ident, snap.key_cols)):
+            aggs += [f"min({k}) AS __mn{i}", f"max({k}) AS __mx{i}",
+                     f"max(CAST({k} IS NULL AS INT)) AS __null{i}"]
         probe = (
-            keys_df.select(
-                _bucket_expr(snap.key_cols, snap.n_buckets).alias("__b"),
-                *snap.key_cols,
+            keys_df.selectExpr(
+                f"{_bucket_sql(snap.key_cols, snap.n_buckets)} AS __b",
+                *map(sql_ident, snap.key_cols),
             )
-            .agg(*aggs)
+            .selectExpr(*aggs)
             .collect()[0]
         )
         touched = probe["__bs"]
         box = {
-            k: (probe[f"__mn_{k}"], probe[f"__mx_{k}"])
-            for k in snap.key_cols
-            if not probe[f"__null_{k}"] and probe[f"__mn_{k}"] is not None
+            k: (probe[f"__mn{i}"], probe[f"__mx{i}"])
+            for i, k in enumerate(snap.key_cols)
+            if not probe[f"__null{i}"] and probe[f"__mn{i}"] is not None
         }
         files = self._key_box_prune(snap, self._all_files(snap, touched), box)
         keys_only = keys_df.select(*snap.key_cols).dropDuplicates(snap.key_cols)
@@ -919,7 +924,7 @@ class SnapshotTable:
             .where(~F.col("__is_del"))
             .select(
                 *out_cols,
-                F.coalesce(F.col("s.__bucket"), _bucket_expr([f"t.{k}" for k in keys], n_buckets)).alias("__bucket"),
+                F.coalesce(F.col("s.__bucket"), _bucket_expr(keys, n_buckets, "t")).alias("__bucket"),
             )
         )
         return merged, obs
@@ -1007,16 +1012,12 @@ class SnapshotTable:
         tag = publish_tag or f"epoch_{epoch_id}"
         now_ms = int(time.time() * 1000)
 
-        bexpr = _bucket_expr(keys, snap.n_buckets)
-        batch = batch.withColumn("__bucket", bexpr)
-        if delete_col is None:
-            batch = batch.withColumn("__del", F.lit(False))
-        else:
-            batch = batch.withColumn("__del", F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False)))
-        if create_only_col is None:
-            batch = batch.withColumn("__co", F.lit(False))
-        else:
-            batch = batch.withColumn("__co", F.coalesce(F.col(create_only_col).cast("boolean"), F.lit(False)))
+        def flag(col: str | None) -> str:
+            return f"coalesce(CAST({sql_ident(col)} AS BOOLEAN), false)" if col else "false"
+
+        batch = batch.selectExpr(
+            "*", f"{_bucket_sql(keys, snap.n_buckets)} AS __bucket",
+            f"{flag(delete_col)} AS __del", f"{flag(create_only_col)} AS __co")
 
         # multi-match guard (Iceberg rule): the merge silently keeps duplicate
         # key rows if the batch violates the unique-per-key contract, so fail
@@ -1029,7 +1030,7 @@ class SnapshotTable:
             ) == "1"
         if check_unique:
             dup = (
-                batch.groupBy(*keys).count().where(F.col("count") > 1)
+                batch.groupBy(*keys).count().where("count > 1")
                 .limit(5).collect()
             )
             if dup:
@@ -1109,34 +1110,33 @@ class SnapshotTable:
         merge seq and the lineage counts."""
         s_cols = set(batch.columns)
         seq = snap.seq + 1
-        out = batch.select(
+        out = batch.selectExpr(
             *[
-                (
-                    F.lit(tag).alias(c) if c == "publish_tag"
-                    else F.lit(now_ms).cast("long").alias(c) if c == "updated_ms"
-                    else (F.col(c) if c in s_cols else F.lit(None).cast(new_schema[c].dataType)).alias(c)
-                )
+                f"{sql_str(tag)} AS publish_tag" if c == "publish_tag"
+                else f"CAST({int(now_ms)} AS BIGINT) AS updated_ms" if c == "updated_ms"
+                else sql_ident(c) if c in s_cols
+                else f"CAST(NULL AS {sql_type(new_schema[c].dataType)}) AS {sql_ident(c)}"
                 for c in (f.name for f in new_schema.fields)
             ],
-            F.lit(seq).alias(MOR_SEQ),
-            F.col("__del").alias(MOR_DEL),
-            F.col("__co").alias(MOR_CO),
-            F.col("__bucket"),
+            f"{int(seq)} AS {MOR_SEQ}",
+            f"__del AS {MOR_DEL}",
+            f"__co AS {MOR_CO}",
+            "__bucket",
         )
         obs = Observation()
         out = out.observe(
             obs,
-            F.count(F.lit(1)).alias("rows_seen"),
-            F.sum(F.col(MOR_DEL).cast("long")).alias("rows_delete_markers"),
+            F.expr("count(1) AS rows_seen"),
+            F.expr(f"sum(CAST({MOR_DEL} AS BIGINT)) AS rows_delete_markers"),
         )
         run = self._write_run(out, snap.key_cols, f"d{epoch_id}_")
         try:
             m = obs.get
         except Exception:
             # empty batch: Observation never materializes (see _merge_cow)
-            row = batch.agg(
-                F.count(F.lit(1)).alias("rows_seen"),
-                F.sum(F.col("__del").cast("long")).alias("rows_delete_markers"),
+            row = batch.selectExpr(
+                "count(1) AS rows_seen",
+                "sum(CAST(__del AS BIGINT)) AS rows_delete_markers",
             ).first()
             m = {k: int(row[k] or 0) for k in ("rows_seen", "rows_delete_markers")}
         if not m.get("rows_seen"):  # an empty write's schema-only file joins no run

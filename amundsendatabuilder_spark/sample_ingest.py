@@ -156,7 +156,7 @@ def fixture_graph(
     # -- standalone tags (TagMetadata: Tag node, key=name) ----------------------
     tags = _csv(spark, data_dir, "sample_tags.csv")
     if tags is not None:
-        from amundsendatabuilder_spark.operators.models import _node, _smap
+        from amundsendatabuilder_spark.operators.amundsen_models import _node, _smap
 
         add("tags",
             _node(tags, F.lower(F.trim(F.col("name"))), "Tag",

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.functions import keys as K
+from amundsendatabuilder_spark.functions.sqltext import sql_ident, sql_str
 from amundsendatabuilder_spark.operators.dedup import lww_dedup_agg
 from amundsendatabuilder_spark.operators.extract import extract_entities
 from amundsendatabuilder_spark.operators.models import (
@@ -128,20 +129,20 @@ def _child_diff(rows: DataFrame, keys: list[str], delete_keeps: tuple[str, ...],
     left alone (shared nodes are never diff-deleted). ``order`` sorts each
     partition so the written files keep a key-clustered layout."""
     payload = [c for c in rows.columns if c not in (*keys, "__new", "scope_key")]
-    has_new = F.col("__has_new")
     return (
         rows.groupBy(*keys)
         .agg(
-            F.max_by(F.struct(*payload), F.col("__new")).alias("__p"),
-            F.max("__new").alias("__has_new"),
-            F.max(~F.col("__new") & F.col("scope_key").isNotNull()).alias("__old_scoped"),
+            F.expr(f"max_by(struct({', '.join(map(sql_ident, payload))}), __new) AS __p"),
+            F.expr("max(__new) AS __has_new"),
+            F.expr("max(NOT __new AND scope_key IS NOT NULL) AS __old_scoped"),
         )
-        .where(has_new | F.col("__old_scoped"))
-        .select(
-            *keys,
-            *[(F.col(f"__p.{c}") if c in delete_keeps
-               else F.when(has_new, F.col(f"__p.{c}"))).alias(c) for c in payload],
-            (~has_new).alias("__delete"),
+        .where("__has_new OR __old_scoped")
+        .selectExpr(
+            *map(sql_ident, keys),
+            *[f"__p.{sql_ident(c)} AS {sql_ident(c)}" if c in delete_keeps
+              else f"CASE WHEN __has_new THEN __p.{sql_ident(c)} END AS {sql_ident(c)}"
+              for c in payload],
+            "NOT __has_new AS __delete",
         )
         .sortWithinPartitions(*order)
     )
@@ -382,27 +383,18 @@ class CDCPipeline:
         # its (event_ts, commit) beats the stored row's — batches may arrive
         # with older events after newer ones (file ordering, replays, multi
         # source), and an unconditional MERGE would resurrect stale state
-        old_ord = old_all.select(
-            *ENTITY_KEYS,
-            F.col("event_ts").alias("__old_ts"),
-            F.col("commit").alias("__old_commit"),
-        )
+        old_ord = old_all.selectExpr(
+            "repo", "path", "event_ts AS __old_ts", "`commit` AS __old_commit")
         effective = (
             winners.join(old_ord, ENTITY_KEYS, "left")
-            .where(
-                F.col("__old_ts").isNull()
-                | (
-                    F.struct(F.col("event_ts"), F.col("commit"))
-                    > F.struct(F.col("__old_ts"), F.col("__old_commit"))
-                )
-            )
+            .where("__old_ts IS NULL"
+                   " OR struct(event_ts, `commit`) > struct(__old_ts, __old_commit)")
             .drop("__old_ts", "__old_commit")
         )
 
-        upserts = effective.where(F.col("op") != "delete")
-        deletes = effective.where(F.col("op") == "delete").select(
-            "repo", "path", "commit", "event_ts"
-        )
+        upserts = effective.where("op != 'delete'")
+        deletes = effective.where("op = 'delete'").selectExpr(
+            "repo", "path", "`commit`", "event_ts")
 
         # the new entity frame feeds the docs and entity merges and the diff
         new_entities = self._mat(
@@ -413,24 +405,23 @@ class CDCPipeline:
         # keys — children of gated-out keys must NOT enter the diff or they
         # would be deleted) and to live rows; `content` is never expanded.
         old_entities = (
-            old_all.join(effective.select(*ENTITY_KEYS), ENTITY_KEYS, "left_semi")
-            .where(~F.col("is_deleted"))
+            old_all.join(effective.selectExpr("repo", "path"), ENTITY_KEYS, "left_semi")
+            .where("NOT is_deleted")
             .drop("is_deleted")
         )
         sides = self._mat(
-            new_entities.drop("content").withColumn("__new", F.lit(True))
-            .unionByName(old_entities.withColumn("__new", F.lit(False)))
+            new_entities.drop("content").selectExpr("*", "true AS __new")
+            .unionByName(old_entities.selectExpr("*", "false AS __new"))
         )
         side = ("__new",)
+        create_only = (
+            f"label IN ({', '.join(map(sql_str, self.create_only_labels))})"
+            if self.create_only_labels else "false"
+        )
         node_batch = _child_diff(
             validate_nodes(nodes_from_entities(sides, carry=side)),
             NODE_KEYS, (), ("label", "key"),
-        ).withColumn(
-            "__create_only",
-            F.col("label").isin(list(self.create_only_labels))
-            if self.create_only_labels
-            else F.lit(False),
-        )
+        ).selectExpr("*", f"{create_only} AS __create_only")
         rel_batch = _child_diff(
             validate_relations(relations_from_entities(sides, carry=side)),
             REL_KEYS, ("start_label", "end_label", "reverse_type"),
@@ -438,9 +429,8 @@ class CDCPipeline:
         )
 
         tag = f"epoch_{epoch_id}"
-        doc_dels = deletes.select(
-            K.table_key(F.col("repo"), F.col("path"), self.cluster).alias("key")
-        ).withColumn("__delete", F.lit(True))
+        doc_dels = deletes.selectExpr(
+            f"{K.table_key_sql('repo', 'path', self.cluster)} AS key", "true AS __delete")
         # decorate rebuilt docs with accumulated READ usage (bucket-pruned
         # point lookup); skipped at zero cost while no usage has ever been
         # ingested (manifest-only check, no Spark job)
@@ -448,20 +438,20 @@ class CDCPipeline:
         usage = None
         if u_snap.files or u_snap.delta_files:
             usage = self.table_usage.read_for_keys(
-                new_entities.select(F.col("table_key").alias("key")),
+                new_entities.selectExpr("table_key AS key"),
                 columns=["total_usage", "unique_usage"],
             )
         doc_batch = (
             docs_from_entities(new_entities, usage)
-            .withColumn("__delete", F.lit(False))
+            .selectExpr("*", "false AS __delete")
             .unionByName(doc_dels, allowMissingColumns=True)
         )
         # entity table keeps TOMBSTONES: a delete is an upsert of
         # (key, event_ts, commit, is_deleted=true) so the LWW gate keeps
         # holding against late stale events; vacuum_tombstones() reclaims
         # them once older than the lateness bound
-        entity_batch = new_entities.withColumn("is_deleted", F.lit(False)).unionByName(
-            deletes.withColumn("is_deleted", F.lit(True)), allowMissingColumns=True
+        entity_batch = new_entities.selectExpr("*", "false AS is_deleted").unionByName(
+            deletes.selectExpr("*", "true AS is_deleted"), allowMissingColumns=True
         )
 
         # the entity table commits LAST: it is the epoch commit marker
@@ -504,9 +494,9 @@ class CDCPipeline:
         if self.table_usage.last_epoch("usage") >= epoch_id:
             return {"epoch": epoch_id, "skipped": True}
 
-        tkey = K.table_key(F.col("repo"), F.col("path"), self.cluster)
+        tkey = K.table_key_sql("repo", "path", self.cluster)
         delta = (
-            usage.groupBy(tkey.alias("table_key"), F.col("user_email"))
+            usage.groupBy(F.expr(f"{tkey} AS table_key"), F.col("user_email"))
             .agg(F.sum(F.col("read_count").cast("long")).alias("read_count"))
         )
         delta = self._mat(delta)
@@ -585,7 +575,10 @@ class CDCPipeline:
         marker — a crash replay recomputes the identical merge.  State
         stays O(active users); session history appends.  Contract (same
         as the streaming operator's watermark): batches arrive time-
-        ordered per user.
+        ordered per user — a user with stored state whose batch's first
+        session starts at or before the stored session's end raises
+        ``ValueError`` (naming up to 5 such users) before any table is
+        prepared, so no ledger advances.
         """
         from amundsendatabuilder_spark.functions.sessionize import (
             sessionize_events,
@@ -615,6 +608,17 @@ class CDCPipeline:
             F.col("start_us").alias("p_start"), F.col("end_us").alias("p_end"),
             F.col("n_events").alias("p_n"), F.col("sum_cents").alias("p_sum"),
         )
+        s_snap = self.session_state.current()
+        if s_snap.files or s_snap.delta_files:
+            late = [r["user_id"] for r in (
+                b.where("session_seq = 1").join(prev, "user_id")
+                .where("start_us <= p_end").select("user_id")
+                .orderBy("user_id").limit(5).collect())]
+            if late:
+                raise ValueError(
+                    f"apply_sessions epoch {epoch_id}: batch is not time-ordered"
+                    f" per user — the first session of user(s) {late} starts at"
+                    " or before the stored session's end")
         # per-user merge decision off the batch's FIRST session (strictly-
         # greater-than-gap starts a new session, so <= gap merges)
         dec = (

@@ -91,3 +91,20 @@ def test_sessions_epoch_replay_is_noop(spark, warehouse):
         "epoch": 0, "skipped": True}
     m2 = pipe2.apply_sessions(_df(spark, e2), 1)
     assert "skipped" not in m2
+
+
+def test_sessions_out_of_order_batch_raises(spark, warehouse):
+    """Input contract: a user with stored state whose batch's first
+    session starts at or before the stored session's end is refused before
+    any table is prepared, so neither session table advances."""
+    e1, e2 = _events()
+    pipe = CDCPipeline(spark, warehouse, n_buckets=8)
+    pipe.apply_sessions(_df(spark, e2), 0)
+    versions = (pipe.user_sessions.current().version,
+                pipe.session_state.current().version)
+    # users 1 and 2 stored sessions ending at +300 / +500 min; e1 starts at +0
+    with pytest.raises(ValueError, match=r"user\(s\) \[1, 2\]"):
+        pipe.apply_sessions(_df(spark, e1), 1)
+    assert (pipe.user_sessions.current().version,
+            pipe.session_state.current().version) == versions
+    assert pipe.session_state.last_epoch("sessions") == 0
